@@ -1,10 +1,3 @@
-from prohap_spark.functions.text import (
-    whitespace_token_count,
-    regex_token_count,
-    stopword_ratio,
-    quality_score_expr,
-    lang_id_expr,
-)
 from prohap_spark.functions.genomics import reverse_complement, translate_cdna_expr
 from prohap_spark.functions.encodings import (
     semi_list_to_array,
@@ -14,11 +7,6 @@ from prohap_spark.functions.encodings import (
 )
 
 __all__ = [
-    "whitespace_token_count",
-    "regex_token_count",
-    "stopword_ratio",
-    "quality_score_expr",
-    "lang_id_expr",
     "reverse_complement",
     "translate_cdna_expr",
     "semi_list_to_array",

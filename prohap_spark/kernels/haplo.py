@@ -51,9 +51,9 @@ def reverse_complement(seq: str) -> str:
 
 
 def translate(seq: str, to_stop: bool = True) -> str:
-    # the kernel's hottest function (r9 profile: 1.3M codon lookups
-    # per e2e, 65% of kernel wall): uppercase ONCE instead of per
-    # codon-slice, bind the dict lookup and list append out of the
+    # the kernel's hottest function (about 1.3M codon lookups per
+    # synthetic-cohort run, 65% of kernel wall): uppercase ONCE
+    # instead of per codon-slice, bind the dict lookup and list append out of the
     # loop (measured -20%); the early break stays — stops arrive
     # after ~30 codons on average, so translate-everything-then-trim
     # variants measured SLOWER despite listcomp speed

@@ -1,35 +1,3 @@
 from prohap_spark.operators.interval_join import interval_join, interval_overlap_join
-from prohap_spark.operators.islands import sessionize, cluster_overlapping_intervals
-from prohap_spark.operators.asof import asof_join
-from prohap_spark.operators.topk import top_k_per_group
-from prohap_spark.operators.dedup import (
-    dedup_exact,
-    token_fingerprint,
-    minhash_signature_expr,
-    minhash_dedup_pairs,
-    lsh_candidate_pairs,
-    jaccard_pairs,
-    simhash,
-)
-from prohap_spark.operators.similarity import cosine_topk, lsh_ann_topk
-from prohap_spark.operators.skew import salted_aggregate, salted_join
 
-__all__ = [
-    "interval_join",
-    "interval_overlap_join",
-    "sessionize",
-    "cluster_overlapping_intervals",
-    "asof_join",
-    "top_k_per_group",
-    "dedup_exact",
-    "token_fingerprint",
-    "minhash_signature_expr",
-    "minhash_dedup_pairs",
-    "lsh_candidate_pairs",
-    "jaccard_pairs",
-    "simhash",
-    "cosine_topk",
-    "lsh_ann_topk",
-    "salted_aggregate",
-    "salted_join",
-]
+__all__ = ["interval_join", "interval_overlap_join"]

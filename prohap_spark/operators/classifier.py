@@ -43,7 +43,7 @@ def quality_classifier_scores(
     from pyspark.ml.classification import LogisticRegression
     from pyspark.ml.feature import HashingTF, Tokenizer
 
-    from prohap_spark.functions import quality_score_expr
+    from prohap_spark.functions.text import quality_score_expr
     from prohap_spark.functions.text import words_array_expr
 
     # r14: token split materialized once for the quality battery (see

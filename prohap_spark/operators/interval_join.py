@@ -55,10 +55,9 @@ def interval_join(
     ~1x its input, so a side that *scans* small but *explodes* big gets
     statically planned as a broadcast — and AQE cannot demote a
     statically chosen broadcast join (no shuffle boundary to measure).
-    The r7 interval scale probe measured the failure: 32x replicated
-    inputs ran 143.6 s under the misestimated broadcast vs 16.0 s on
-    the shuffle path. Inputs read directly from files carry honest scan
-    stats and need no hint.
+    Measured on 32x replicated inputs: 143.6 s under the misestimated
+    broadcast vs 16.0 s on the shuffle path. Inputs read directly from
+    files carry honest scan stats and need no hint.
     """
     partition_keys = list(partition_keys or [])
     p = F.col(point_col)

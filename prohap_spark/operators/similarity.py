@@ -1070,8 +1070,7 @@ def ivf_cell_stats(spark, path: str) -> DataFrame:
     proportions; drifting data piles deltas into a few cells (skewing
     the probe-time candidate scan) or lands in cells the base barely
     used. When the delta histogram diverges, retrain + rebuild
-    (:func:`write_ivf_index` fresh) — the decision this table feeds is
-    exactly the stats-driven planning idiom of operators/stats.py.
+    (:func:`write_ivf_index` fresh) — the decision this table feeds.
     Reads id+cell columns only, never the vectors."""
     import glob as _glob
     import json

@@ -107,16 +107,15 @@ def extract_haplotypes(
     iv = tc.withColumn("iv_start", F.col("pos")).withColumn(
         "iv_end", F.col("pos") + ref_len - 1
     )
-    # r15 (guide §2.4): establish the pipeline's ONE carrier
-    # partitioning HERE, on transcript_id alone. hash(transcript_id)
-    # satisfies the clustered distribution of every downstream step —
-    # the conflict windows partitioned by (transcript, sample, phase),
-    # the per-copy signature aggregate, AND the signature→haplotype
-    # aggregate keyed (transcript_id, strand, signature) — so Catalyst
-    # plans a single Exchange where the (transcript, sample, phase)
-    # partitioning needed a second full shuffle of the signature table
-    # between the two aggregations (plan diff: plans/r15/
-    # domain_prohap_e2e_{before,after}.txt, Exchange(41) gone). Same
+    # Establish the pipeline's ONE carrier partitioning HERE, on
+    # transcript_id alone. hash(transcript_id) satisfies the clustered
+    # distribution of every downstream step — the conflict windows
+    # partitioned by (transcript, sample, phase), the per-copy signature
+    # aggregate, AND the signature→haplotype aggregate keyed
+    # (transcript_id, strand, signature) — so Catalyst plans a single
+    # Exchange where the (transcript, sample, phase) partitioning would
+    # need a second full shuffle of the signature table between the two
+    # aggregations (tests/test_plans.py pins the exchange count). Same
     # bytes through the one exchange either way; the coarser key is
     # scale-safe because the transcript IS the reference pipeline's
     # own unit of parallelism (get_haplotypes.py forks its Pool per
@@ -162,8 +161,8 @@ def extract_haplotypes(
     # aggregation over `sigs` would re-execute the whole melt → conflict
     # window → signature pipeline (the BIG side): its two consumers get
     # different pruned projections, so ReuseExchange never matches them,
-    # and at 100 TB that doubles the dominant scan+shuffle. Measured on
-    # the synthetic cohort bench: ~2× end-to-end.
+    # and at 100 TB that doubles the dominant scan+shuffle (about 2×
+    # end-to-end on the synthetic cohort).
     haplos = sigs.groupBy("transcript_id", "strand", "signature").agg(
         F.any_value("changes").alias("changes"),
         F.count(F.lit(1)).alias("occurrence_count"),
@@ -179,15 +178,14 @@ def extract_haplotypes(
     # diploidy from the transcript span (is_autosomal analog,
     # get_haplotypes.py:92). The cohort totals stay a LAZY broadcast
     # 1-row aggregate (no blocking driver-side .count() actions).
-    # r15 (guide §2.4): samples_meta is cohort METADATA — thousands of
-    # rows at any production scale — yet its two auxiliary aggregates
-    # below each paid full shuffle exchanges (a 2-stage global agg for
-    # the totals, a 4-stage groupBy+collect for the denominator map:
-    # Exchanges 51/59/62 in plans/r15/domain_prohap_e2e_before.txt).
-    # coalesce(1) gives the scans SinglePartition partitioning, which
-    # satisfies every aggregation's required distribution — all three
-    # Exchanges vanish and the aux row builds in one task, which is
-    # the honest plan for a metadata-sized input.
+    # samples_meta is cohort METADATA — thousands of rows at any
+    # production scale — so its two auxiliary aggregates below should
+    # not pay shuffle exchanges (a 2-stage global agg for the totals, a
+    # 4-stage groupBy+collect for the denominator map). coalesce(1)
+    # gives the scans SinglePartition partitioning, which satisfies
+    # every aggregation's required distribution — no Exchange is
+    # planned and the aux row builds in one task, which is the honest
+    # plan for a metadata-sized input.
     meta1 = samples_meta.coalesce(1)
     totals = meta1.agg(
         F.count(F.lit(1)).alias("__n_samples"),
@@ -197,8 +195,7 @@ def extract_haplotypes(
         "transcript_id",
         _is_diploid_locus(F.col("chrom"), F.col("start")).alias("is_diploid"),
     )
-    # A4 (definition moved above the joins, r14 session 5): the
-    # per-(super)population frequency maps below are computed
+    # A4: the per-(super)population frequency maps below are computed
     # ROW-LOCALLY from the collected per-copy population codes plus ONE
     # broadcast single-row map of group denominators — zero additional
     # shuffles and no second pass over the carrier table. Per-row cost
@@ -235,17 +232,15 @@ def extract_haplotypes(
             ).alias("__denoms")
         )
     )
-    # r14 session 5: ONE one-row broadcast crossJoin instead of two —
-    # the cohort totals and the group-denominator map (both single-row
-    # lazy aggregates over samples_meta) combine into one auxiliary row
+    # ONE one-row broadcast crossJoin instead of two — the cohort
+    # totals and the group-denominator map (both single-row lazy
+    # aggregates over samples_meta) combine into one auxiliary row
     # BEFORE broadcasting, so the full haplotype table flows through
     # ONE BroadcastNestedLoopJoin, not two (the second BNLJ moves
     # inside the broadcast build, where it crosses two 1-row frames).
     # At scale that is one fewer full operator pass over the haplotype
     # table; results are identical (same columns, same values, joined
-    # to every row either way). Plan diff and flat local A/B:
-    # plans/r14/domain_prohap_e2e_s5{before,after}.txt,
-    # OPTIMIZATION_r14.md session 5.
+    # to every row either way).
     aux = totals.crossJoin(denom_map)
     haplos = haplos.join(F.broadcast(tr_diploid), "transcript_id", "left").crossJoin(
         F.broadcast(aux)
@@ -253,7 +248,7 @@ def extract_haplotypes(
     denom = F.when(
         F.coalesce(F.col("is_diploid"), F.lit(True)), 2 * F.col("__n_samples")
     ).otherwise(F.col("__n_males") + 2 * (F.col("__n_samples") - F.col("__n_males")))
-    # frequency as exact 1e-5 units via the floor device (r12): the A5
+    # frequency as exact 1e-5 units via the floor device: the A5
     # duplicate merge sums frequencies, and sums of rounded 5-decimal
     # DOUBLES reassociate differently per aggregation order — the
     # float-gate class. floor(cnt*1e5/denom + 0.5)/1e5 is the same

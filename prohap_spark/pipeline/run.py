@@ -78,30 +78,32 @@ def run_prohap_pipeline(spark: SparkSession, cfg: ProHapConfig) -> dict[str, str
     if cfg.skip_synonymous_only:
         annotated = drop_synonymous_only(annotated)
     annotated = annotated.persist()  # consumed by both sinks
+    try:
+        tsv_out = f"{cfg.output_dir}/haplotypes_tsv"
+        write_tsv(haplotype_table(annotated, transcripts), tsv_out, single_file=True)
 
-    tsv_out = f"{cfg.output_dir}/haplotypes_tsv"
-    write_tsv(haplotype_table(annotated, transcripts), tsv_out, single_file=True)
+        # FASTA chain: per-haplotype proteins → stop-split → global dedup →
+        # UTR removal → final DB (Snakefile:324-386)
+        from pyspark.sql import functions as F
 
-    # FASTA chain: per-haplotype proteins → stop-split → global dedup →
-    # UTR removal → final DB (Snakefile:324-386)
-    from pyspark.sql import functions as F
-
-    fasta_rows = annotated.where(F.length("protein") >= cfg.min_protein_len).select(
-        F.lit("generic_enshap").alias("tag"),
-        F.col("haplotype_id").alias("accession"),
-        F.concat(F.lit("transcript:"), F.col("transcript_id")).alias("description"),
-        F.col("protein").alias("sequence"),
-    )
-    for path in cfg.extra_fastas:
-        fasta_rows = fasta_rows.unionByName(read_fasta(spark, path))
-    db = remove_utr_only_entries(
-        merge_duplicate_sequences(
-            split_stop_codon_fragments(fasta_rows, min_len=cfg.min_protein_len)
+        fasta_rows = annotated.where(F.length("protein") >= cfg.min_protein_len).select(
+            F.lit("generic_enshap").alias("tag"),
+            F.col("haplotype_id").alias("accession"),
+            F.concat(F.lit("transcript:"), F.col("transcript_id")).alias("description"),
+            F.col("protein").alias("sequence"),
         )
-    )
-    fasta_out = f"{cfg.output_dir}/haplotypes_fasta"
-    write_fasta(db, fasta_out)
-    return {"tsv": tsv_out, "fasta": fasta_out}
+        for path in cfg.extra_fastas:
+            fasta_rows = fasta_rows.unionByName(read_fasta(spark, path))
+        db = remove_utr_only_entries(
+            merge_duplicate_sequences(
+                split_stop_codon_fragments(fasta_rows, min_len=cfg.min_protein_len)
+            )
+        )
+        fasta_out = f"{cfg.output_dir}/haplotypes_fasta"
+        write_fasta(db, fasta_out)
+        return {"tsv": tsv_out, "fasta": fasta_out}
+    finally:
+        annotated.unpersist()
 
 
 def run_provar_pipeline(spark: SparkSession, cfg: ProHapConfig) -> dict[str, str]:
@@ -109,9 +111,12 @@ def run_provar_pipeline(spark: SparkSession, cfg: ProHapConfig) -> dict[str, str
     transcripts, cdna, variants, _names, _meta = _load_world(spark, cfg)
     annotated = run_provar(
         variants, transcripts, cdna, min_af=cfg.phased_min_af
-    ).persist()
-    tsv_out = f"{cfg.output_dir}/variants_tsv"
-    write_tsv(variant_table(annotated), tsv_out, single_file=True)
-    fasta_out = f"{cfg.output_dir}/variants_fasta"
-    write_fasta(dedup_protein_fasta(annotated, cfg.min_protein_len), fasta_out)
-    return {"tsv": tsv_out, "fasta": fasta_out}
+    ).persist()  # consumed by both sinks
+    try:
+        tsv_out = f"{cfg.output_dir}/variants_tsv"
+        write_tsv(variant_table(annotated), tsv_out, single_file=True)
+        fasta_out = f"{cfg.output_dir}/variants_fasta"
+        write_fasta(dedup_protein_fasta(annotated, cfg.min_protein_len), fasta_out)
+        return {"tsv": tsv_out, "fasta": fasta_out}
+    finally:
+        annotated.unpersist()

@@ -1,6 +1,6 @@
-"""Deterministic synthetic cohort generator for domain-pipeline
-benchmarks and stress tests (FIXTURES.md invariants: ref alleles match
-the cDNA, exon sums equal cDNA length, phased biallelic GTs).
+"""Deterministic synthetic cohort generator for the domain oracles and
+plan tests (FIXTURES.md invariants: ref alleles match the cDNA, exon
+sums equal cDNA length, phased biallelic GTs).
 
 Everything derives from md5 streams keyed by (seed, entity id) — no
 RNG state, so any subset regenerates identically on any worker.
@@ -15,10 +15,11 @@ from pyspark.sql import DataFrame, SparkSession
 BASES = "ACGT"
 
 # Cohort-cache version: bump whenever generate_cohort's CONTENT
-# changes, or a stale /tmp cache from an earlier build poisons both
-# engines (v2: X/PAR transcripts; v3: PAR1 placement dense-indexed so
-# the generator scales past ~13 PAR1 transcripts without overrunning
-# the PAR1 window). Query modules import this instead of hardcoding.
+# changes, or a stale cache from an earlier build poisons both Spark
+# and the SQL oracles that read it (v2: X/PAR transcripts; v3: PAR1
+# placement dense-indexed so the generator scales past ~13 PAR1
+# transcripts without overrunning the PAR1 window). The oracles import
+# this instead of hardcoding.
 COHORT_BASE = "/tmp/prohap_bench_cohort_v3"
 
 
@@ -46,13 +47,13 @@ def generate_cohort(
 ):
     """Returns (variants_df, transcripts_df, cdna_df, sample_names,
     samples_meta_df) shaped exactly like the real sources' outputs."""
-    # The domain-oracle SQL (queries/domain_oracle.py) translates over a
+    # The domain-oracle SQL (tests/oracles/domain_oracle.py) translates over a
     # fixed range(0,300) codon grid and overlays over range(0,2000) —
     # valid only while every cDNA fits those bounds (SNPs keep length,
     # so mutated == reference length). Fail here, not silently there.
     assert exon_len * n_exons <= 900, (
         "cDNA longer than the oracle's 300-codon grid — widen the ranges "
-        "in queries/domain_oracle.py before growing the cohort"
+        "in tests/oracles/domain_oracle.py before growing the cohort"
     )
     sample_names = [f"S{i:04d}" for i in range(n_samples)]
     pops = ["FIN", "YRI", "CHB", "GBR", "PEL"]
@@ -81,9 +82,7 @@ def generate_cohort(
             if base + span <= 2_781_479:
                 par1_k += 1
             else:
-                # PAR1 (2.78 Mb) fills at ~1,380 transcripts (first hit
-                # at cohort scale ~97, surfaced by the 100x probe):
-                # spill the overflow to non-PAR X at a HALF-STRIDE
+                # PAR1 (2.78 Mb) fills at ~1,380 transcripts: spill the overflow to non-PAR X at a HALF-STRIDE
                 # offset so it can never collide with the t%7==3 lane
                 # (bases ≡ 5,000 vs ≡ 0 mod 10,000, spans < 2 kb).
                 # Placement at every smaller scale is byte-identical —
@@ -155,8 +154,8 @@ def generate_cohort(
 
 
 def materialized_cohort(spark: SparkSession, scale: int = 1, base_dir: str = COHORT_BASE):
-    """Cohort cached as parquet (deterministic → safe to reuse): the
-    bench should measure the PIPELINE, not driver-side fixture
+    """Cohort cached as parquet (deterministic → safe to reuse): tests
+    should spend their time in the pipeline, not in Python-side fixture
     generation. The path carries the COHORT_BASE version suffix — see
     the constant's comment for the bump discipline."""
     import json
@@ -165,10 +164,10 @@ def materialized_cohort(spark: SparkSession, scale: int = 1, base_dir: str = COH
     d = f"{base_dir}_s{scale}"
     meta_file = f"{d}/_names.json"
     if not os.path.exists(meta_file):
-        # Build-then-rename: two harnesses (driver, tools/check.py) can
-        # both see a cold cache after a version bump; each builds into
-        # its OWN pid staging dir and the atomic directory rename picks
-        # exactly one winner — never a mid-overwrite mixed cohort.
+        # Build-then-rename: two processes can both see a cold cache
+        # after a version bump; each builds into its OWN pid staging dir
+        # and the atomic directory rename picks exactly one winner —
+        # never a mid-overwrite mixed cohort.
         import shutil
 
         stage = f"{d}.stage_{os.getpid()}"
@@ -203,7 +202,7 @@ def materialized_cohort(spark: SparkSession, scale: int = 1, base_dir: str = COH
 
 
 def run_prohap_e2e(spark: SparkSession, scale: int = 1) -> DataFrame:
-    """End-to-end ProHap on the synthetic cohort (bench entry)."""
+    """End-to-end ProHap on the synthetic cohort."""
     from prohap_spark.pipeline.prohap import annotate_haplotypes, extract_haplotypes
 
     variants, transcripts, cdna, names, meta = materialized_cohort(spark, scale)
@@ -217,33 +216,3 @@ def run_provar_e2e(spark: SparkSession, scale: int = 1) -> DataFrame:
 
     variants, transcripts, cdna, _names, _meta = materialized_cohort(spark, scale)
     return run_provar(variants.drop("genotypes"), transcripts, cdna, min_af=0.01)
-
-
-def run_peptides_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """End-to-end peptide annotation at corpus scale (bench entry):
-    the same J6→J9→J10→J11+U4 chain the oracle-checked
-    ``u4_peptide_classes`` runs, but over EVERY qualifying document at
-    ``sf_dir`` instead of the capped 12-doc oracle set — ~1000 protein
-    groups and ~4000 peptides at sf0.1 — so the chain's scale shape is
-    measured round-over-round like the prohap/provar pipelines."""
-    from pyspark.sql import functions as F
-
-    from prohap_spark.pipeline.peptides import annotate_peptides
-    from prohap_spark.queries.peptide_board import peptide_workload
-    from prohap_spark.queries.registry import table
-
-    d = (
-        table(spark, sf_dir, "documents")
-        .where(
-            (F.col("doc_id") % 5 == 0)
-            & (F.length(F.regexp_replace("text", " ", "")) >= 140)
-        )
-        .select(
-            "doc_id",
-            F.upper(
-                F.substring(F.regexp_replace("text", " ", ""), 1, 120)
-            ).alias("base"),
-        )
-    )
-    peptides, canonical, alleles = peptide_workload(d)
-    return annotate_peptides(peptides, canonical, alleles)

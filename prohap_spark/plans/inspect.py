@@ -3,8 +3,7 @@ operator's plan is checked for scan-level pushdown, column pruning,
 broadcast choice, and whole-stage codegen coverage — the properties
 that decide whether a query survives a 100× scale-up).
 
-Used by tests/test_plans.py to pin plan shapes, and by tools/
-plan_audit.py to print a per-query report.
+Used by tests/test_plans.py to pin plan shapes.
 """
 
 from __future__ import annotations
@@ -77,8 +76,8 @@ def plan_nodes(df: DataFrame) -> list[str]:
 
 def scans_per_file(df: DataFrame) -> dict[str, int]:
     """How many times each input file/directory is scanned in the
-    EXECUTED plan — the multiplied-subplan detector (r8: the triangle
-    count's edge build appeared six times; Spark re-executes unshared
+    EXECUTED plan — the multiplied-subplan detector (the triangle
+    count's edge build once appeared six times; Spark re-executes unshared
     subplans, so any count >= 3 of one file deserves a look). Counts
     are invisible past a localCheckpoint boundary — audit with
     share_scan=False to see a shared operator's full lineage."""

@@ -1,6 +1,5 @@
 from __future__ import annotations
 
-import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -58,14 +57,9 @@ def engine_session(spark: SparkSession) -> SparkSession:
             ("spark.sql.adaptive.skewJoin.enabled", "true"),
             ("spark.sql.adaptive.coalescePartitions.enabled", "true"),
             # byte-blind coalescing serializes small-byte/expensive-row
-            # Arrow kernel stages behind one task — see session.py for
-            # the measured r9 case (ProHap kernel 3.6 s -> 1.8 s);
-            # same env override as session.py so the documented knob
-            # reaches the session registered queries actually run on
-            (
-                "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-                os.environ.get("SPARK_GRAFT_MIN_COALESCE", "64kb"),
-            ),
+            # Arrow kernel stages behind one task — the same floor as
+            # session.py, which explains it
+            ("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64kb"),
         ):
             child.conf.set(k_, v_)
         _ENGINE_SESSIONS[key] = child

@@ -179,69 +179,6 @@ def f2_allele_validity(spark: SparkSession, sf_dir: str) -> DataFrame:
     return filter_valid_alleles(poisoned).select("chrom", "pos", "id", "ref", "alt")
 
 
-_J8_FASTA = [
-    # (tag, accession, description, sequence)
-    ("ensref", "p1", "transcript:T1 pos:1", "MADEFG"),
-    ("haplo", "p2", "transcript:T2 pos:7", "MVDEFG"),
-    # gene_name NULL in the dim -> falls back to gene_id
-    ("haplo", "p3", "transcript:T3 pos:9", "MMDEFG"),
-    # transcript absent from the dim -> description unchanged
-    ("var", "p4", "transcript:T9 pos:2", "MADRFG"),
-    # no transcript: token at all -> unchanged
-    ("cont", "p5", "contaminant keratin", "KKKKKK"),
-]
-_J8_DIM = [
-    # (transcript_id, gene_id, gene_name)
-    ("T1", "G1", "GENE1"),
-    ("T2", "G2", "GENE2"),
-    ("T3", "G3", None),
-]
-
-_SQL_J8_FASTA = ",\n      ".join(
-    f"('{t}', '{a}', '{d}', '{s}')" for t, a, d, s in _J8_FASTA
-)
-_SQL_J8_DIM = ",\n      ".join(
-    "('{}', '{}', {})".format(t, g, f"'{n}'" if n else "NULL")
-    for t, g, n in _J8_DIM
-)
-
-J8_SQL = f"""
-WITH fa(tag, accession, description, sequence) AS (VALUES
-      {_SQL_J8_FASTA}),
-tr(transcript_id, gene_id, gene_name) AS (VALUES
-      {_SQL_J8_DIM})
-SELECT f.tag, f.accession,
-       CASE WHEN t.transcript_id IS NOT NULL
-            THEN f.description || ' gene:' || coalesce(t.gene_name, t.gene_id)
-            ELSE f.description END AS description,
-       f.sequence
-FROM fa f
-LEFT JOIN tr t ON t.transcript_id = regexp_extract(f.description,
-                                                   'transcript:(\\w+)', 1)
-"""
-
-
-@register("j8_gene_header_annotation", J8_SQL)
-def j8_gene_header_annotation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J8 (transcript ⋈ gene attrs): the postprocess header-annotation
-    join (pipeline/postprocess.py simplify_headers, reference
-    fasta_simplify_headers.py:45-100) over a literal FASTA board —
-    gene_name hit, NULL-gene_name fallback to gene_id, dim-miss
-    pass-through, and a token-less contaminant header, re-derived by
-    the oracle as a plain regex-extract left join."""
-    from prohap_spark.pipeline.postprocess import simplify_headers
-
-    fasta = spark.createDataFrame(
-        _J8_FASTA, ["tag", "accession", "description", "sequence"]
-    )
-    tr = spark.createDataFrame(
-        _J8_DIM, "transcript_id string, gene_id string, gene_name string"
-    )
-    return simplify_headers(fasta, tr).select(
-        "tag", "accession", "description", "sequence"
-    )
-
-
 _RT_JSONL = f"/tmp/prohap_rt_jsonl_{os.getpid()}"
 _atexit.register(_shutil.rmtree, _RT_JSONL, True)
 

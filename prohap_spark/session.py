@@ -30,52 +30,34 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         # AQE's coalescing targets shuffle BYTES and is blind to
-        # downstream per-row cost: the r9 profile caught it folding the
-        # ProHap kernel's 6.4k-row input (compressed ACGT shuffles
-        # brutally small) into ONE partition, serializing a 32-way
-        # Arrow/Python stage behind a single task (measured: e2e
-        # 3.6 s -> 1.8 s after this floor restored 16-way parallelism).
-        # Lowering the coalesce floor from the 1 MB default keeps
-        # small-byte/expensive-row stages wide; large shuffles are
-        # unaffected (their parallelismFirst byte targets dominate),
-        # and the worst case for genuinely tiny JVM stages is a few ms
-        # of extra task scheduling.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-            os.environ.get("SPARK_GRAFT_MIN_COALESCE", "64kb"),
-        )
+        # downstream per-row cost: it can fold the ProHap kernel's input
+        # (thousands of rows, tiny compressed ACGT shuffles) into ONE
+        # partition and serialize the Arrow/Python stage behind a single
+        # task. The lower floor keeps small-byte/expensive-row stages
+        # wide (tests/test_plans.py pins the kernel's partition spread);
+        # large shuffles are unaffected. Without it (4 vCPU, seed 8):
+        # provar_sites first_run_s 13.9 -> 17.4 s, peptide_report
+        # jvm_peak_rss_mb 1135 -> 1232 MB; prohap_cohort run_s 7.4 -> 6.9 s.
+        .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64kb")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # Whole-stage-codegen CLASS cache (static conf, default 100
-        # entries, JVM-wide). This engine's workload is many distinct
-        # query shapes per session (the bench alone runs 29 queries
-        # x ~5-10 codegen units each), so the 100-entry default
-        # thrashes: every pass re-compiles nearly every generated
-        # class through Janino, a fixed ~50-200 ms tax per stage that
-        # round-robin eviction makes PERMANENT within the session —
-        # measured r14: the full bench drops 16.98 s -> 11.27 s
-        # min_total (-34%) at equal cpu_probe from this one setting,
-        # and the previously-unexplained "in-pass JVM state" penalty
-        # (late-pass queries 0.2-0.9 s over their isolated times,
-        # unrecoverable by clearCache/gc) disappears — it was cache
-        # eviction, not JIT pollution. Not a local-only win: the same
-        # cache exists in every executor JVM and any long-running app
-        # with >100 distinct codegen units pays the same recompile
-        # tax at any scale; entries hold compiled classes (KB-100s of
-        # KB each), so 4096 bounds the cache at tens of MB.
-        .config(
-            "spark.sql.codegen.cache.maxEntries",
-            os.environ.get("SPARK_GRAFT_CODEGEN_CACHE", "4096"),
-        )
+        # Whole-stage-codegen CLASS cache (static, JVM-wide, default 100
+        # entries). Warm runs of a pipeline re-plan the same stages; once
+        # the distinct generated classes exceed the cache, eviction
+        # forces a Janino recompile of every stage on every run. Without
+        # it (4 vCPU, seeds 7 and 8): prohap_cohort run_s 6.00 -> 7.42 s
+        # and 5.54 -> 8.02 s.
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # InferFiltersFromGenerate re-derives size(e)>0 below every
-        # explode and pushdown substitutes the FULL generator expression
-        # into the condition — for expensive computed arrays (minhash
-        # signatures, winnowing fingerprints, segment lists) that means
-        # re-evaluating the whole per-row pipeline 2-3 extra times
-        # (measured: -20% on the LSH family, 50x on winnowing before it
-        # switched to explode_outer). Empty-array rows are rare in every
-        # generate path here, so the rule's benefit is nil.
+        # InferFiltersFromGenerate re-derives size(e) > 0 below every
+        # generator and substitutes the whole generator expression into
+        # it, so computed arrays — the interval join's sequence(...) bins,
+        # the split(...) lists of the multiallelic split, the stop-codon
+        # fragment split and the peptide ;-lists — are built twice per
+        # row; those arrays are never empty. With the rule (4 vCPU,
+        # seeds 7 and 8):
+        # peptide_report run_s 4.14 -> 4.47 s and 3.50 -> 3.70 s,
+        # prohap_cohort 6.27 -> 6.67 s and 5.49 -> 8.68 s.
         .config(
             "spark.sql.optimizer.excludedRules",
             "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
@@ -90,12 +72,3 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
-
-
-def load_tables(spark: SparkSession, sf_dir: str, names: list[str] | None = None):
-    """Load the driver's synthetic parquet tables as a dict of DataFrames."""
-    names = names or [
-        "region", "nation", "customer", "supplier", "part",
-        "orders", "lineitem", "events", "documents", "embeddings",
-    ]
-    return {n: spark.read.parquet(f"{sf_dir}/{n}.parquet") for n in names}

@@ -2,10 +2,8 @@
 for data-quality counters: metrics (row counts, null counts, exact
 cent sums) ride the SAME action as the write/collect, costing zero
 extra scans — at 100 TB a monitoring pass that re-reads the corpus is
-itself a budget item, observe() makes it free. The engine's validate
-gates (operators/validate.py) answer "is this table acceptable";
-observe() answers "what flowed through THIS run" — both feed the same
-governance dashboards."""
+itself a budget item, observe() makes it free. observe() answers
+"what flowed through THIS run"."""
 
 import sys
 

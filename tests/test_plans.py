@@ -48,25 +48,33 @@ def test_star_join_broadcasts_dims(spark, qs):
     assert rep["bnl_joins"] == 0
 
 
-def test_binned_interval_join_avoids_nested_loop(spark, qs):
-    """THE J1 property: the binned rewrite must plan as a hash equi-join,
-    not the BroadcastNestedLoopJoin a naive range predicate produces."""
+def test_binned_interval_join_avoids_nested_loop(spark):
+    """The binned interval join must plan as a hash equi-join on the bin
+    key, not the BroadcastNestedLoopJoin a plain range predicate
+    produces."""
+    from prohap_spark.operators.interval_join import interval_join
     from prohap_spark.plans import plan_report
 
-    from prohap_spark.queries.windowed import j1_interval_join_binned
-
-    rep = plan_report(j1_interval_join_binned(spark, SF))
+    pts = spark.createDataFrame(
+        [(i, "1" if i % 2 else "X", i * 37 % 1_000) for i in range(200)],
+        "pid long, chrom string, pos long",
+    )
+    ivs = spark.createDataFrame(
+        [(i, "1" if i % 2 else "X", i * 50, i * 50 + 120) for i in range(20)],
+        "iid long, chrom string, start long, end long",
+    )
+    joined = interval_join(
+        pts, ivs, point_col="pos", start_col="start", end_col="end",
+        partition_keys=["chrom"], bin_size=64, strategy="binned",
+    )
+    rep = plan_report(joined)
     assert rep["bnl_joins"] == 0
-    # r14: the binned leg hints shuffle_hash (the exploded interval
-    # side is generator-fanned and would otherwise be statically
-    # misplanned as a rebuilt-per-execution broadcast) — a
-    # ShuffledHashJoin satisfies the property this test pins: a hash
-    # EQUI-join on the bin key, never a nested-loop range probe
     assert (
         rep["broadcast_joins"] + rep["sortmerge_joins"]
         + rep["shuffledhash_joins"]
         >= 1
     )
+    assert joined.count() > 0
 
 
 def test_lsh_ann_avoids_cross_join(spark, qs):
@@ -668,15 +676,12 @@ def test_engine_child_session_pins_aqe_skew_confs(spark):
             "spark.sql.adaptive.coalescePartitions.enabled",
         ):
             assert child.conf.get(k) == "true", k
-        # and the anti-serialization coalesce floor (see session.py)
-        # — same env-overridable expression as session.py, so the
-        # documented SPARK_GRAFT_MIN_COALESCE knob reaches the session
-        # registered queries actually execute on (r9 advice)
-        import os
-
+        # and the anti-serialization coalesce floor, the same value
+        # session.py sets, reaches the session registered queries
+        # actually execute on
         assert child.conf.get(
             "spark.sql.adaptive.coalescePartitions.minPartitionSize"
-        ) == os.environ.get("SPARK_GRAFT_MIN_COALESCE", "64kb")
+        ) == "64kb"
         df = table(spark, SF, "lineitem")
         sess = df.sparkSession
         assert sess.conf.get("spark.sql.adaptive.skewJoin.enabled") == "true"
@@ -689,15 +694,14 @@ def test_engine_child_session_pins_aqe_skew_confs(spark):
 
 
 def test_prohap_kernel_stage_not_serialized_by_aqe_coalesce(spark):
-    """The r9 profile found AQE's byte-based partition coalescing
-    folding the ProHap kernel's input (thousands of rows, but tiny
-    COMPRESSED shuffle bytes — ACGT text compresses brutally) into ONE
-    partition, serializing the most expensive Python stage in the repo
-    behind a single task (e2e 3.6 s -> 1.8 s once fixed). The fix is
-    the coalesce floor minPartitionSize=64kb in session.py /
-    registry.py; this pins the RUNTIME behavior — the kernel's input
-    must still be spread over multiple partitions after AQE re-plans,
-    with no single partition holding everything."""
+    """AQE's byte-based partition coalescing can fold the ProHap
+    kernel's input (thousands of rows, but tiny compressed shuffle
+    bytes: ACGT text compresses well) into ONE partition, serializing
+    the most expensive Python stage behind a single task. The coalesce
+    floor (minPartitionSize in session.py) prevents that; this pins the
+    runtime behavior: the kernel's input must still be spread over
+    multiple partitions after AQE re-plans, with no single partition
+    holding everything."""
     import prohap_spark.kernels.spark_kernels as sk
     import prohap_spark.pipeline.prohap as pm
     from prohap_spark.pipeline.synthetic import run_prohap_e2e
@@ -776,7 +780,7 @@ def test_er_fuzzy_banded_levenshtein_and_length_guard(spark, qs):
 
 
 def test_prohap_haplotype_chain_one_carrier_exchange(spark):
-    """r15: the haplotype extraction chain establishes ONE carrier
+    """The haplotype extraction chain establishes ONE carrier
     partitioning (hash(transcript_id)) that serves the conflict
     windows, the per-copy signature aggregate AND the
     signature→haplotype aggregate — no second full shuffle of the
@@ -790,8 +794,10 @@ def test_prohap_haplotype_chain_one_carrier_exchange(spark):
     from prohap_spark.plans import formatted_plan
 
     plan = formatted_plan(run_prohap_e2e(spark, scale=1))
-    shuffles = re.findall(r"[+:]- Exchange \(", plan)
-    assert len(shuffles) == 3, f"expected 3 shuffle exchanges, got {len(shuffles)}"
+    shuffles = re.findall(r"^.*[+:]- Exchange \(.*$", plan, re.M)
+    assert len(shuffles) == 3, (
+        f"expected 3 shuffle exchanges, got {len(shuffles)}:\n" + "\n".join(shuffles)
+    )
     assert "hashpartitioning(transcript_id" in plan
 
 

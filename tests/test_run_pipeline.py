@@ -100,3 +100,31 @@ def test_prohap_min_count_10_filters_all(spark, tmp_path):
     tsv_files = glob.glob(f"{out['tsv']}/part-*.csv.gz")
     with gzip.open(tsv_files[0], "rt") as f:
         assert len(f.readlines()) == 1  # header only
+
+
+def test_runners_release_cached_blocks(spark, tmp_path):
+    """Each runner persists its annotated table for the two sinks and
+    must release it before returning, so repeated runs in one session do
+    not pile up cached blocks."""
+    from prohap_spark.pipeline.run import (
+        ProHapConfig,
+        run_prohap_pipeline,
+        run_provar_pipeline,
+    )
+
+    def persistent_rdds():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    gtf, fasta, vcf = write_fixtures(tmp_path)
+    before = persistent_rdds()
+    for i, runner in enumerate((run_prohap_pipeline, run_provar_pipeline)):
+        cfg = ProHapConfig(
+            vcf_path=vcf,
+            gtf_path=gtf,
+            cdna_fasta_path=fasta,
+            samples_tsv_path=_samples_tsv(tmp_path),
+            output_dir=str(tmp_path / f"out_cache{i}"),
+            haplo_min_count=1,
+        )
+        runner(spark, cfg)
+        assert persistent_rdds() - before == set(), runner.__name__
