@@ -22,13 +22,12 @@ Design for 100 TB of media:
   bytes, so the per-worker envelope is rows × avg_media_size — at the
   10,000-row default, 10 MB payloads would demand 100 GB per worker.
   Size it to target_batch_bytes / payload_bytes before any
-  binary-heavy stage. MEASURED (tools/arrow_batch_probe.py, ~0.8 MB
-  real-BMP decodes): wall is FLAT from 10,000 rows/batch down to 2 —
-  Arrow streams per batch either way — so capping the envelope (e.g.
-  64 MB/batch) costs nothing; there is no wall-clock reason to let a
-  binary stage run at the row-count default;
-- outputs are fixed-width feature vectors → downstream joins/ANN reuse
-  the similarity operators.
+  binary-heavy stage. Measured on ~0.8 MB real-BMP decodes, wall is
+  flat from 10,000 rows/batch down to 2 (Arrow streams per batch
+  either way), so capping the envelope (e.g. 64 MB/batch) costs
+  nothing;
+- outputs are fixed-width feature vectors that downstream joins can
+  consume directly.
 """
 
 from __future__ import annotations

@@ -119,8 +119,8 @@ def quality_classifier_scores(
 # trainer (r8). The L-BFGS model above is the production-quality filter;
 # its float iterations are engine artifacts no SQL oracle can replay, which
 # keeps text_quality_classifier rows-only by design. This trainer is the
-# pagerank_micro/sim_kmeans_ivf device applied to model fitting: squared-
-# loss gradient descent where EVERY operation is exact integer arithmetic
+# pagerank_micro integer device applied to model fitting: squared-loss
+# gradient descent where EVERY operation is exact integer arithmetic
 # both engines evaluate identically (mul, add, truncating div — Spark
 # `div` == DuckDB `//` toward zero, verified on negatives), so the learned
 # weights are bit-identical under any partitioning and replay as unrolled

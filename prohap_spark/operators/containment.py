@@ -12,8 +12,7 @@ physical strategies:
 
 - BroadcastNestedLoopJoin: per-row work is O(|left| x |probes|)
   substring scans, and the broadcast must fit in every executor AND
-  the driver (~2x while building). Measured
-  (tools/containment_scale_probe.py at sf0.1, local[32]): corpus
+  the driver (~2x while building). Measured at sf0.1 on local[32]: corpus
   8x -> ~flat wall (the corpus streams; idle cores absorb it until
   they saturate, then it goes linear), probes 8x -> ~7x wall (5.8 s
   -> 40.6 s — the probe count multiplies EVERY left row's work, so

@@ -706,8 +706,7 @@ def cdc_chunk_table(
     # THE COST MODEL LIVES IN LAMBDA BINDING. Higher-order-function
     # bodies are interpreted per element with NO subexpression
     # elimination, so any non-lambda-variable subtree inside a lambda
-    # re-evaluates per element. Three generations of blowup fixed
-    # here, each measured by tools/cdc_scale_probe.py:
+    # re-evaluates per element. Three blowups this shape avoids:
     # (1) `cuts` referenced 4x re-ran the entire candidate-hash scan
     #     per reference (~20x wall on the md5 variant at sf0.01);
     # (2) exploding (a, b] interval structs and slicing in a follow-up
@@ -823,9 +822,8 @@ def cdc_chunk_table_rolling(
     100 TB shape: the kernel is per-row independent (no state across
     documents), Arrow-batched, and emits chunk rows only — the
     downstream dup aggregate still shuffles (id, hash) pairs alone.
-    ``tools/cdc_scale_probe.py`` measures the per-word cost staying
-    flat as documents grow 1k→16k words while the column variant's
-    grows with window·n."""
+    Its per-word cost stays flat as documents grow from 1k to 16k
+    words, while the column variant's grows with window·n."""
     import hashlib
     import zlib
 
@@ -1371,9 +1369,8 @@ def write_dedup_index(
     index: DataFrame, path: str, partition_by: list[str] | None = None
 ) -> dict:
     """Persist a validated index artifact (``exact_key_index`` /
-    ``lsh_band_index`` / the IVF cell table in
-    operators/similarity.py) with a VALIDATION MANIFEST beside the
-    parquet files.
+    ``lsh_band_index``) with a VALIDATION MANIFEST beside the parquet
+    files.
 
     Why: a torn or partially-deleted index is the failure parquet
     cannot catch on its own — every surviving part-file is internally

@@ -241,9 +241,9 @@ def pagerank_micro(
     ``materialize=False`` returns the LAZY frame with the edge cache
     still registered (the caller's next action executes the chain;
     clear with spark.catalog.clearCache()) — for harnesses that time
-    execution separately from plan construction, e.g. bench.py, where
-    the default in-function eager checkpoint would move all the work
-    outside the timed region."""
+    execution separately from plan construction, where the default
+    in-function eager checkpoint would move all the work outside the
+    timed region."""
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct()
     nodes = (
         e.select(F.col("src").alias("id"))

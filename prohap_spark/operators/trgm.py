@@ -146,10 +146,9 @@ def append_trigram_index(
     independent (no cross-document state), so ingesting a delta is
     build-on-the-delta + union — the corpus TEXT is never re-shingled
     (the CPU-heavy part is O(|delta|)), but the merged posting table
-    is still REWRITTEN wholesale, so the I/O is O(|index|).
-    tools/trgm_append_probe.py measures this honestly: at 16x base
-    size append ≈ rebuild in wall time on this box (posting-table I/O
-    dominates at gate scale). The true 100 TB shape is SEGMENTED
+    is still REWRITTEN wholesale, so the I/O is O(|index|): at 16x
+    base size, append and rebuild take about the same wall time
+    (posting-table I/O dominates). The scalable shape is SEGMENTED
     ingest — write each delta as its own manifest-validated segment
     and union segments at read time, compacting on a maintenance
     schedule exactly like streaming/sink.py's epochs — which trades

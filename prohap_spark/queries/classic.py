@@ -89,12 +89,10 @@ def q_join_board(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Classic-join board — the r11-green singletons
     ``q3_shipping_priority`` (selective dim filter -> 3-way join ->
     aggregate) and ``q5_local_supplier_volume`` (6-way join with a
-    cross-table equality) MERGED into one registered query (r13
-    slot-freeing device, 15th use — the freed r14 front slot funds
-    text_preference_pairs' rule-(a) debut alongside the canary) on a
+    cross-table equality) merged into one registered query on a
     unified (leg, k, revenue_cents, orderdate_us, s) schema, off-leg
     columns NULL. The singleton callables above stay the library /
-    bench / plan-pin surface; revenue stays exact integer cents."""
+    plan-pin surface; revenue stays exact integer cents."""
     NL, NS = F.lit(None).cast("long"), F.lit(None).cast("string")
     a = q3_shipping_priority(spark, sf_dir).select(
         F.lit("q3").alias("leg"),
@@ -361,17 +359,6 @@ def agg_cube_grouping(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# domain_prohap_synthetic / domain_provar_synthetic were DEREGISTERED
-# in r7 (r6 verdict, What's-missing #4): both were rows-only wrappers
-# around the exact run_prohap_e2e / run_provar_e2e calls that
-# domain_prohap_snp_oracle / domain_provar_snp_oracle already run WITH
-# full value-hash oracles (queries/domain_oracle.py) — the only delta
-# was exposing the engine-internal xxhash64 id columns, which no SQL
-# engine can replay. Keeping strictly-weaker duplicates produced two
-# perennial `err: no_oracle` CORRECTNESS rows and burned two rotation
-# slots per window for zero added coverage.
-
-
 @register(
     "agg_salted_skew",
     """
@@ -465,13 +452,11 @@ def multimodal_resize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# multimodal_audio_windows and multimodal_wav_codec were MERGED into
-# the one registered query below in r8 (the gif_tiff/bmp_png pattern):
-# both emit the identical (media_id, win_idx, win_mean, win_rms) shape
-# — one over raw payload bytes, one over PCM16 samples re-extracted
-# from a genuine RIFF/WAVE container — so one query drives both legs
-# and frees a rotation slot (the r8 front had to absorb the two
-# rule-(b) hash-reds on top of a full rule-(c) window). Every feature
+# multimodal_audio_windows and multimodal_wav_codec are registered as
+# the one query below: both emit the identical (media_id, win_idx,
+# win_mean, win_rms) shape — one over raw payload bytes, one over PCM16
+# samples re-extracted from a genuine RIFF/WAVE container — so one
+# query drives both legs. Every feature
 # branch of the two originals is preserved: raw byte windows on even
 # ids; WAV container parse on odd ids, with the junk LIST chunk the
 # walker must skip injected on ids ≡ 1 (mod 4).
@@ -591,11 +576,10 @@ def _docs_as_media(spark: SparkSession, sf_dir: str, min_bytes: int):
     )
 
 
-# multimodal_bmp_codec and multimodal_png_codec were MERGED into the
-# one registered query below in r7 (the gif_tiff pattern): both are
-# lossless byte-exact paths with the identical text-byte oracle, so
-# one query drives both decoders and frees a rotation slot — r8's
-# front was at ZERO slack before this. Every feature branch of the
+# multimodal_bmp_codec and multimodal_png_codec are registered as the
+# one query below: both are lossless byte-exact paths with the
+# identical text-byte oracle, so one query drives both decoders. Every
+# feature branch of the
 # two originals is preserved: BMP bottom-up rows + padding on even
 # ids; PNG five-filter reconstruction on odd ids with RGB color type
 # on ids ≡ 1 (mod 4) and an injected tEXt ancillary chunk on odd
@@ -838,9 +822,8 @@ def multimodal_jpeg_color_codec(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "multimodal_gif_tiff_codec",
-    # one registered query drives BOTH lossless paletted/tagged codecs
-    # (registry slots are rationed by the rotation window): even
-    # media_ids encode the 8x8 byte raster as a REAL GIF89a (LZW,
+    # one registered query drives BOTH lossless paletted/tagged codecs:
+    # even media_ids encode the 8x8 byte raster as a REAL GIF89a (LZW,
     # global color table; every 4th id interlaced so the 4-pass row
     # order is driver-exercised), odd ids as a REAL baseline TIFF (IFD
     # tag walk). Both are lossless, so pixel k == text byte k and the
@@ -1046,12 +1029,10 @@ def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
         "qty_cents",
     )
 
-# q4_order_priority + q22_idle_customers MERGED into q_subquery_board
-# (r12 tail — the slot-freeing device, 14th use; the freed slot funds
-# text_trgm_search, queries/textdata.py). Singleton callables stay
-# the library surface; the EXISTS adaptation note: the schema has no
-# l_commitdate/l_receiptdate, so "late" means a line shipped >90 days
-# after the order date.
+# q4_order_priority + q22_idle_customers are registered as one query,
+# q_subquery_board. Singleton callables stay the library surface; the
+# EXISTS adaptation note: the schema has no l_commitdate/l_receiptdate,
+# so "late" means a line shipped >90 days after the order date.
 _Q4_SQL = """
     SELECT o.o_orderpriority, count(*) AS order_count
     FROM orders o

@@ -26,10 +26,9 @@ def engine_session(spark: SparkSession) -> SparkSession:
     the engine's required settings: UTC session timezone (so
     TIMESTAMP_NTZ→TIMESTAMP casts match the TZ-naive DuckDB oracle
     regardless of the caller's zone) and nanos-as-long parquet reads.
-    Queries run on the CALLER's session (the driver's, not ours) —
-    mutating its conf would leak engine settings into user code; a
-    returned DataFrame executes under its OWN session's conf, so the
-    isolation is free."""
+    Queries run on the CALLER's session, not ours — mutating its conf
+    would leak engine settings into user code; a returned DataFrame
+    executes under its OWN session's conf, so the isolation is free."""
     key = id(spark)
     child = _ENGINE_SESSIONS.get(key)
     if child is None:
@@ -38,20 +37,19 @@ def engine_session(spark: SparkSession) -> SparkSession:
         child.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         # see session.py: the inferred size(e)>0 filter below a Generate
         # re-inlines expensive computed-array expressions (-20% on the
-        # LSH family); the driver's vanilla session doesn't set this,
-        # so the engine child must
+        # MinHash LSH queries); a caller's session need not set this,
+        # so the engine child does
         child.conf.set(
             "spark.sql.optimizer.excludedRules",
             "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
         )
         # AQE + skew-join splitting pinned HERE, not just in the
-        # session factory: the r8 skew probe (tools/skew_join_probe.py)
-        # measured unmitigated skewed SMJ at ~6x the AQE-split wall AND
-        # found that confs set on a PARENT session at runtime never
-        # reach frames planned on this child — so the mitigation the
-        # engine relies on must be pinned on the session its frames
-        # actually execute under, independent of the caller's conf
-        # (tests/test_plans.py pins the inheritance).
+        # session factory: unmitigated skewed sort-merge joins ran ~6x
+        # the AQE-split wall, and confs set on a PARENT session at
+        # runtime never reach frames planned on this child — so the
+        # mitigation must be pinned on the session its frames execute
+        # under, independent of the caller's conf (tests/test_plans.py
+        # pins the inheritance).
         for k_, v_ in (
             ("spark.sql.adaptive.enabled", "true"),
             ("spark.sql.adaptive.skewJoin.enabled", "true"),

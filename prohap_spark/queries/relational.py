@@ -453,11 +453,10 @@ def so_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     return both.unionByName(only)
 
 
-# agg_rollup + agg_pivot MERGED into agg_shape_board (r12 — the
-# slot-freeing device; see queries/scalars.py's stream_window_board
-# note for the round's budget arithmetic). Singleton callables stay
-# the library surface; the pivot leg hashes in UNPIVOTED long form so
-# both legs share one column shape.
+# agg_rollup + agg_pivot are registered as one query,
+# agg_shape_board. Singleton callables stay the library surface; the
+# pivot leg hashes in UNPIVOTED long form so both legs share one column
+# shape.
 _AGG_ROLLUP_SQL = """
     SELECT coalesce(l_returnflag, '<all>') AS l_returnflag,
            coalesce(l_linestatus, '<all>') AS l_linestatus,
@@ -662,7 +661,7 @@ def agg_quantile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _sketch_algebra_oracle_sql() -> str:
+def _sketch_algebra_duckdb_sql() -> str:
     from prohap_spark.functions.sketches import _md5_window_sql, hll_oracle_sql
 
     hk = _md5_window_sql("v", 1, 15)
@@ -767,7 +766,7 @@ def _sketch_algebra_oracle_sql() -> str:
     """
 
 
-@register("sketch_algebra_board", _sketch_algebra_oracle_sql())
+@register("sketch_algebra_board", _sketch_algebra_duckdb_sql())
 def sketch_algebra_board(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The r11 sketch-ALGEBRA surfaces on one correctness board
     (functions/sketches.py, previously pytest-only):
@@ -1204,7 +1203,7 @@ def j12_bucketed_colocated_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _j13_bloom_oracle_sql() -> str:
+def _j13_bloom_duckdb_sql() -> str:
     from prohap_spark.functions.sketches import BLOOM_WORD_BITS as WB
     from prohap_spark.functions.sketches import _md5_window_sql
 
@@ -1272,7 +1271,7 @@ def _j13_bloom_oracle_sql() -> str:
     """
 
 
-@register("j13_bloom_semi_join", _j13_bloom_oracle_sql())
+@register("j13_bloom_semi_join", _j13_bloom_duckdb_sql())
 def j13_bloom_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J13 (r11 tail, beyond the reference): Bloom-filter semi-join
     reduction (operators/bloom_join.py) — the runtime-filter pushdown
@@ -1341,7 +1340,7 @@ def j13_bloom_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return res.unionByName(stats)
 
 
-def _layout_zorder_oracle_sql() -> str:
+def _layout_zorder_duckdb_sql() -> str:
     from prohap_spark.operators.layout import zorder_key_sql
 
     zk = zorder_key_sql(["xq", "yq"], 8)
@@ -1407,7 +1406,7 @@ def _layout_zorder_oracle_sql() -> str:
     """
 
 
-@register("layout_zorder_cluster", _layout_zorder_oracle_sql())
+@register("layout_zorder_cluster", _layout_zorder_duckdb_sql())
 def layout_zorder_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Z-order data-layout clustering (operators/layout.py — r11 tail,
     beyond the reference): orders quantized to a 256x256

@@ -78,7 +78,7 @@ def j9_containment_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     side, nested-loop only against it — through the bounded
     ``containment_join`` operator, whose enforced max_probe_rows is
     the SURVEY "keep right side small" contract made loud (scaling
-    measured in tools/containment_scale_probe.py)."""
+    numbers in operators/containment.py)."""
     from prohap_spark.operators.containment import containment_join
 
     d = table(spark, sf_dir, "documents")
@@ -106,14 +106,10 @@ def f12_liftover_artifact_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     return d.where(F.substring("text", 3, 5) != "alpha").select("doc_id")
 
 
-# stream_session_window + stream_sliding_window MERGED into
-# stream_window_board (r12 — the slot-freeing device, 12th use): both
-# were r10-green rule-(c) obligations for the r13 front, which was
-# one over budget (50 r10-greens + table_maintenance_board's rule-(a)
-# slot); the board carries both obligations as ONE rule-(a) entry and
-# the freed slot funds table_stats_board (queries/maintenance.py).
-# The singleton callables stay the library surface; the sliding leg's
-# gate also hardens from a double total_value to exact integer cents.
+# stream_session_window + stream_sliding_window are registered as one
+# query, stream_window_board. The singleton callables stay the
+# library surface; the sliding leg's gate also hardens from a double
+# total_value to exact integer cents.
 _SESSION_WINDOW_SQL = """
     WITH g AS (
       SELECT user_id, ts,
@@ -365,15 +361,12 @@ def c_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def c_scalar_board(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """§2.8 scalar-surface board — the r8-cohort singletons
-    ``c_math_hash`` + ``c2_regex_split_explode`` + ``c_json_extract``
-    MERGED into one registered query (the slot-freeing board device of
-    dedup_minhash_lsh_board / dedup_simhash_board, r11): three
-    independent legs over three tables, mapped onto one generic
-    (leg, k, i1-i3, s1-s3) schema with the other legs' columns NULL —
-    every value each singleton hashed still flows into the value hash,
-    so coverage is preserved while the registry spends one rotation
-    slot instead of three. The original callables remain the library
+    """§2.8 scalar-surface board — the singletons ``c_math_hash`` +
+    ``c2_regex_split_explode`` + ``c_json_extract`` registered as one
+    query: three independent legs over three tables, mapped onto one
+    generic (leg, k, i1-i3, s1-s3) schema with the other legs' columns
+    NULL — every value each singleton hashed still flows into the value
+    hash. The original callables remain the library
     surface above (docstrings carry the reference citations)."""
     NB, NS = F.lit(None).cast("long"), F.lit(None).cast("string")
 
@@ -564,7 +557,7 @@ def stream_stateful_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SSB_QLO, _SSB_QHI, _SSB_QN, _SSB_QS = 0.0, 500.0, 256, (0.25, 0.5, 0.75)
 
 
-def _stream_sketch_oracle_sql() -> str:
+def _stream_sketch_duckdb_sql() -> str:
     from prohap_spark.functions.sketches import _md5_window_sql, hll_oracle_sql
 
     d, w, th = 4, 256, 10
@@ -641,7 +634,7 @@ def _stream_sketch_oracle_sql() -> str:
     """
 
 
-@register("stream_sketch_board", _stream_sketch_oracle_sql())
+@register("stream_sketch_board", _stream_sketch_duckdb_sql())
 def stream_sketch_board(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING sketch state ops on the correctness board (r10's
     streaming/events.py stateful_distinct_hll + stateful_heavy_hitters

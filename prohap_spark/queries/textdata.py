@@ -61,10 +61,9 @@ def text_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality scoring: length band + mean word length + stopword ratio
-    + punctuation density, all JVM-side expressions. Library/bench
-    callable — REGISTERED via text_quality_board since r13 (the
-    slot-freeing merge with text_langid; both were r10-greens whose
-    rule-(c) slots funded the r13 front overflow)."""
+    + punctuation density, all JVM-side expressions. Library
+    callable, registered through text_quality_board together with
+    text_langid."""
     d = table(spark, sf_dir, "documents")
     _ws = F.col("__ws")
     return d.select(
@@ -79,8 +78,8 @@ def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Language ID via stopword-profile argmax (n-gram heuristic).
-    Library/bench callable — REGISTERED via text_quality_board since
-    r13 (see :func:`text_quality`)."""
+    Library callable, registered through text_quality_board (see
+    :func:`text_quality`)."""
     d = table(spark, sf_dir, "documents")
     return d.select(
         "doc_id", "text", words_array_expr("text").alias("__ws")
@@ -127,18 +126,15 @@ def text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def text_quality_board(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Text-analysis board — the r10-green singletons ``text_quality``
+    """Text-analysis board — the singletons ``text_quality``
     (length/word-length/stopword/punctuation quality score) and
-    ``text_langid`` (stopword-profile argmax language ID) MERGED into
-    one registered query (r13 slot-freeing board, 14th merge): one
-    row per document, ONE documents scan computing both surfaces
-    (the singletons scanned it twice). Per the r12 verdict's
-    integer-projection rule, the two hashed ratio columns are integer
-    micro-units (CAST(round(ratio*1e6) AS BIGINT)) instead of the
-    singletons' round(ratio, 6) doubles — per-row scalar divisions
-    were never the red class, but a touched gate gets the stronger
-    projection. The float callables above remain the library/bench
-    surface."""
+    ``text_langid`` (stopword-profile argmax language ID) registered as
+    one query: one row per document, ONE documents scan computing both
+    surfaces (the singletons scanned it twice). The two hashed ratio
+    columns are integer micro-units (CAST(round(ratio*1e6) AS BIGINT))
+    instead of the singletons' round(ratio, 6) doubles, so the value
+    hash never compares doubles. The float callables above remain the
+    library surface."""
     from prohap_spark.operators.skew import spread_scan
 
     # r14: the documents table is one parquet row group = ONE scan
@@ -243,9 +239,7 @@ def text_preference_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle on the prompt id; ranks and counts ride one window pass;
     the self-join matches exactly one partner per row (rank is unique
     within the group), so the pairing is a 1:1 equi-join on
-    (pid, partner_rank) — never quadratic in candidates. Registered
-    r13-tail into the slot freed by the q3+q5 merge (q_join_board);
-    fronts r14 with the canary."""
+    (pid, partner_rank) — never quadratic in candidates."""
     from pyspark.sql import Window
 
     from prohap_spark.operators.skew import spread_scan
@@ -387,11 +381,9 @@ def dedup_exact_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# dedup_jaccard_pairs + dedup_cluster_reps MERGED into
-# dedup_cluster_board (r15 — the slot-freeing device, 17th use; see
-# the sampling_board comment for the r15 budget arithmetic). Both were
-# r12-green rule-(c) obligations; the board carries both as ONE entry,
-# the singleton callables stay the library surface, legs unchanged.
+# dedup_jaccard_pairs + dedup_cluster_reps are registered as one
+# query, dedup_cluster_board; the singleton callables stay the library
+# surface, legs unchanged.
 _JACCARD_PAIRS_SQL = """
     WITH t AS (
       SELECT doc_id, lang,
@@ -434,14 +426,10 @@ _DUCK_BIGRAMS = (
 )
 
 
-# dedup_minhash_lsh and dedup_minhash_lsh_capped were MERGED into the
-# one registered query below in r8 (the gif_tiff/bmp_png pattern):
-# identical (id_a, id_b, jaccard) output shapes, and the capped leg
-# differs only by the bucket-size guard, so one query drives both
-# operator code paths under a leg tag and frees the rotation slot the
-# r8 front needed to absorb the two rule-(b) hash-reds on top of a
-# full rule-(c) window. bench.py keeps timing the uncapped operator
-# directly (like-for-like with BENCH_r07's dedup_minhash_lsh entry).
+# dedup_minhash_lsh and dedup_minhash_lsh_capped are registered as the
+# one query below: identical (id_a, id_b, jaccard) output shapes, and
+# the capped leg differs only by the bucket-size guard, so one query
+# drives both operator code paths under a leg tag.
 
 
 @register(
@@ -555,11 +543,9 @@ def dedup_minhash_lsh_board(spark: SparkSession, sf_dir: str) -> DataFrame:
     return leg("uncapped", None).unionByName(leg("capped", 8)).unionByName(plan_leg)
 
 
-# dedup_simhash and dedup_simhash_near were MERGED into the one
-# registered board query below in r8 (the same slot-freeing device as
-# dedup_minhash_lsh_board, forced when text_bpe_train gained its
-# oracle and had to re-front): the near leg derives from the exact
-# same signature table the sig leg groups, so one query drives both
+# dedup_simhash and dedup_simhash_near are registered as the one board
+# query below: the near leg derives from the exact same signature
+# table the sig leg groups, so one query drives both
 # code paths — exact-signature grouping AND Hamming-ball banding —
 # with per-leg columns NULL'd on the other leg (self-describing, and
 # the value hash covers both structures).
@@ -756,10 +742,9 @@ def dedup_cluster_reps(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dedup_cluster_board(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup pair-graph board — exact Jaccard pairs + MinHash
-    cluster representatives MERGED into one registered query (r15
-    slot-freeing board; see the _JACCARD_PAIRS_SQL comment) on a
-    unified (leg, lang, id_a, id_b, jaccard, cluster_size) schema,
-    off-leg columns NULL. Each leg is the UNCHANGED singleton
+    cluster representatives registered as one query on a unified
+    (leg, lang, id_a, id_b, jaccard, cluster_size) schema, off-leg
+    columns NULL. Each leg is the UNCHANGED singleton
     callable — identical rows, identical values (cluster leg maps
     doc_id->id_a, cluster_rep->id_b)."""
     NS = F.lit(None).cast("string")
@@ -892,14 +877,9 @@ def text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # sampling_hash_split + sampling_stratified_rates +
-# sampling_token_budget MERGED into sampling_board (r15 — the
-# slot-freeing device, 17th use): all three were r12-green rule-(c)
-# obligations for an r15 front that was 53 obligations against the 50
-# budget (49 rule-(c) + sql_api_q6's rule-(b) + sim_lsh_index_probe's
-# rule-(a) + the sim_embedding_board per-leg split mandated by
-# VERDICT r14 #2). The board carries all three obligations as ONE
-# entry; the singleton callables stay the library surface and the
-# legs' arithmetic is byte-identical (same md5 bucket, same window).
+# sampling_token_budget are registered as one query, sampling_board;
+# the singleton callables stay the library surface and the legs'
+# arithmetic is byte-identical (same md5 bucket, same window).
 _SAMPLING_HASH_SPLIT_SQL = """
     WITH b AS (
       SELECT doc_id, lang,
@@ -1993,7 +1973,7 @@ def unigram_logprob_scores(d: DataFrame, head_k: int = 65536) -> DataFrame:
 # average is avg_nll_micro / 1e6, derivable downstream. If this
 # query is STILL red on pure BIGINTs, the defect is localized to
 # the micro-nat derivation itself, not the float-hash layer.
-# (Registered via text_info_board since r11 — the slot-freeing merge.)
+# (Registered via text_info_board.)
 _UNIGRAM_ORACLE = f"""
     WITH toks AS (
       SELECT doc_id, unnest(string_split(lower(trim(text)), ' ')) AS w
@@ -2112,9 +2092,7 @@ def sampling_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def sampling_board(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic-sampling board — hash split, stratified rates, and
-    token-budget allocation MERGED into one registered query (r15
-    slot-freeing board, 17th use; see the _SAMPLING_HASH_SPLIT_SQL
-    comment for the budget arithmetic) on a unified
+    token-budget allocation registered as one query on a unified
     (leg, doc_id, lang, source, bucket, n_tokens, cum_tokens, split,
     kept) schema, off-leg columns NULL. Each leg is the UNCHANGED
     singleton callable — identical rows, identical values."""
@@ -2321,7 +2299,7 @@ def dedup_winnowing(spark: SparkSession, sf_dir: str) -> DataFrame:
 # while passing the full-precision local checker, so the gated
 # projection now carries no double — the readable nats value is
 # entropy_micro / 1e6, derivable downstream.
-# (Registered via text_info_board since r11 — the slot-freeing merge.)
+# (Registered via text_info_board.)
 _CHAR_ENTROPY_ORACLE = f"""
     WITH ch AS (
       SELECT doc_id, unnest(string_split_regex(lower(text), '')) AS c
@@ -2398,11 +2376,10 @@ def text_char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def text_info_board(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Information-theoretic quality scoring board — the r8-cohort
-    singletons ``text_unigram_logprob`` (unigram-LM NLL, the
-    CCNet/KenLM perplexity-proxy shape) and ``text_char_entropy``
-    (per-character Shannon entropy) MERGED into one registered query
-    (the r11 slot-freeing board device): both are micro-nat
+    """Information-theoretic quality scoring board — the singletons
+    ``text_unigram_logprob`` (unigram-LM NLL, the CCNet/KenLM
+    perplexity-proxy shape) and ``text_char_entropy`` (per-character
+    Shannon entropy) registered as one query: both are micro-nat
     integer-exact per-document scores over the same corpus, mapped
     onto (leg, doc_id, n_units, micro_sum, micro_avg) — every value
     either singleton hashed still reaches the value hash. The
@@ -2540,9 +2517,9 @@ def corpus_curation_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def curation_funnel(d: DataFrame, share_scan: bool = True) -> DataFrame:
-    """The funnel body over any (doc_id, source, text) frame — shared
-    by the registered oracle query and tools/docs_scale_probe.py's
-    replicated-corpus scaling leg. ``share_scan=False`` disables the
+    """The funnel body over any (doc_id, source, text) frame, so it can
+    run on a replicated corpus as well as on the registered query's
+    table. ``share_scan=False`` disables the
     flags checkpoint below (preemptible-cluster escape hatch, like
     every share_scan in this codebase)."""
     from pyspark.sql import Window
@@ -3014,7 +2991,7 @@ def dedup_host_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
 _CDC_W, _CDC_D, _CDC_MIN, _CDC_MAX = 3, 8, 4, 32
 
 
-def _cdc_oracle_sql() -> str:
+def _cdc_duckdb_sql() -> str:
     # the codebase's 60-bit md5 integer device (15 hex chars, exact)
     md5int = (
         "list_reduce(list_transform(range(1, 16), "
@@ -3108,7 +3085,7 @@ _CDC_ROLLING_ORACLE = """
     f"""
     SELECT 'column' AS leg, doc_id, n_chunks AS k1, n_dup_chunks AS k2,
            CAST(dup_fraction_micro AS VARCHAR) AS v
-    FROM ({_cdc_oracle_sql()})
+    FROM ({_cdc_duckdb_sql()})
     UNION ALL
     {_CDC_ROLLING_ORACLE}
     """,

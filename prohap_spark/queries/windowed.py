@@ -92,15 +92,12 @@ def w1b_interval_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
     return isl.groupBy("l_suppkey", "island_id").agg(F.count(F.lit(1)).alias("n_members"))
 
 
-# w1_islands_sessionize and w1b_interval_islands were MERGED into the
-# one registered board below in the r11 tail (the
-# dedup_minhash_lsh_board slot-freeing device, 9th use): both are the
-# W1 gaps-and-islands family — time-gap sessionization and interval
-# overlap clustering — and map onto one (leg, key, island_id, n,
-# start_us, end_us) schema with off-leg columns NULL, so per-operator
-# value coverage is unchanged and a rotation slot frees for the r12
-# front. The singleton callables above stay the library/pytest/bench
-# surface (bench keeps a direct w1_islands_sessionize builder).
+# w1_islands_sessionize and w1b_interval_islands are registered as the
+# one board below: both are the W1 gaps-and-islands family — time-gap
+# sessionization and interval overlap clustering — and map onto one
+# (leg, key, island_id, n, start_us, end_us) schema with off-leg
+# columns NULL, so per-operator value coverage is unchanged. The
+# singleton callables above stay the library/pytest surface.
 @register(
     "w1_islands_board",
     f"""
@@ -139,12 +136,9 @@ def w1_islands_board(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sess.unionByName(iv)
 
 
-# w2_deterministic_row_number + w_ntile_percent_rank MERGED into
-# w_rank_board (r15 — the slot-freeing device, 17th use; see
-# textdata.py's sampling_board comment for the r15 budget
-# arithmetic). Both were r12-green rule-(c) obligations; the board
-# carries both as ONE entry, the singleton callables stay the
-# library surface, legs unchanged.
+# w2_deterministic_row_number + w_ntile_percent_rank are registered as
+# one query, w_rank_board; the singleton callables stay the library
+# surface, legs unchanged.
 _W2_ROW_NUMBER_SQL = """
     SELECT o_orderkey, rn, printf('%x', rn) AS hex_id
     FROM (
@@ -287,8 +281,8 @@ def j10_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (Registered via j1_interval_board since r12 — the slot-freeing
-# merge, device use 11; the callable stays the library/bench surface.)
+# (Registered via j1_interval_board; the callable stays the library
+# surface.)
 _J1_POINT_SQL = """
     SELECT o.o_orderkey, count(*) AS n_matches,
            CAST(sum(CAST(round(l.l_extendedprice * 100) AS BIGINT)) AS BIGINT) AS sum_price_cents
@@ -443,16 +437,10 @@ def j1b_interval_overlap_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return joined.groupBy("o_orderkey").agg(F.count(F.lit(1)).alias("n_overlaps"))
 
 
-# j1_interval_join_binned and j1b_interval_overlap_join MERGED into
-# one registered board (r12, the dedup_minhash_lsh_board slot-freeing
-# device, 11th use): the r12 front owed 51 slots against the 50
-# budget (1 rule-b red + 7 rule-a never-checked + 43 rule-c
-# r9-greens) — merging the two J1 flavors onto one (leg, key, n,
-# cents) schema with off-leg columns NULL keeps per-operator value
-# coverage unchanged, carries both members' rule-(c) obligation into
-# the board (fronting NOW as a rule-(a) registration), and brings the
-# obligations to exactly 50. The singleton callables above stay the
-# library/pytest/bench surface.
+# j1_interval_join_binned and j1b_interval_overlap_join are registered
+# as one board on a (leg, key, n, cents) schema with off-leg columns
+# NULL, which keeps per-operator value coverage unchanged. The
+# singleton callables above stay the library/pytest surface.
 @register(
     "j1_interval_board",
     f"""
@@ -538,15 +526,12 @@ def stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# stream_tumbling_window and stream_dedup_watermark were MERGED into
-# the one registered board below in the r11 tail (the
-# dedup_minhash_lsh_board slot-freeing device, 10th use): both are the
-# §2.10 batch-checkable streaming-surface family, mapped onto one
-# (leg, i1, i2, i3, s1, d1) generic schema (the c_scalar_board
-# pattern) with off-leg columns NULL — per-operator value coverage
-# unchanged, one rotation slot freed for the r12 front. The singleton
-# callables above stay the library/pytest/bench surface (bench keeps a
-# direct stream_tumbling_window builder).
+# stream_tumbling_window and stream_dedup_watermark are registered as
+# one board: both are the §2.10 batch-checkable streaming-surface
+# family, mapped onto one (leg, i1, i2, i3, s1, d1) generic schema
+# (the c_scalar_board pattern) with off-leg columns NULL, so
+# per-operator value coverage is unchanged. The singleton callables
+# above stay the library/pytest surface.
 _RESAMPLE_LOCF_SQL = """
     WITH rs AS (
       SELECT user_id, epoch_us(ts) // 86400000000 AS bucket,
@@ -979,8 +964,7 @@ def w_ntile_percent_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def w_rank_board(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rank-window board — deterministic global row_number + the
-    ntile/percent_rank/cume_dist analytics MERGED into one registered
-    query (r15 slot-freeing board; see the _W2_ROW_NUMBER_SQL comment)
+    ntile/percent_rank/cume_dist analytics registered as one query
     on a unified (leg, o_orderkey, o_orderpriority, rank_val, hex_id,
     pct_rank, cume) schema, off-leg columns NULL. Each leg is the
     UNCHANGED singleton callable — identical rows, identical values

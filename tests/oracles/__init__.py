@@ -7,6 +7,9 @@ hash.
 Most fixtures are synthetic (the cached cohort of
 ``pipeline/synthetic.py`` or literal boards). Entries registered with
 ``tables=`` also read TPC-H sf0.01 parquet tables from ``TPCH_DIR``.
+Entries registered with ``writes=True`` take a third argument, a fresh
+directory for their sink output that exists until the result is
+collected.
 """
 
 from __future__ import annotations
@@ -16,19 +19,20 @@ import math
 from collections.abc import Callable
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 # TPC-H sf0.01 parquet tables, kept in a ``testdata`` directory beside
 # the checkout
 TPCH_DIR = str(Path(__file__).resolve().parents[3] / "testdata" / "sf0.01")
 
-# name -> (fn(spark, sf_dir) -> DataFrame, oracle SQL, TPC-H tables read)
-ORACLES: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str, tuple[str, ...]]] = {}
+# name -> (fn(spark, sf_dir[, out_dir]) -> DataFrame, oracle SQL,
+#          TPC-H tables read, whether fn takes out_dir)
+ORACLES: dict[str, tuple[Callable[..., DataFrame], str, tuple[str, ...], bool]] = {}
 
 
-def register(name: str, oracle: str, tables: tuple[str, ...] = ()):
+def register(name: str, oracle: str, tables: tuple[str, ...] = (), writes: bool = False):
     def deco(fn):
-        ORACLES[name] = (fn, oracle, tables)
+        ORACLES[name] = (fn, oracle, tables, writes)
         return fn
 
     return deco

@@ -19,19 +19,9 @@ read_fasta; the oracle replicates the normalization rules in SQL.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from tests.oracles import register
-
-_RT_DIR = f"/tmp/prohap_shim_board_{os.getpid()}"
-
-import atexit as _atexit
-import shutil as _shutil
-
-_atexit.register(_shutil.rmtree, _RT_DIR, True)
-
 
 _SHIM_ORACLE = """
     SELECT 'vcf' AS leg,
@@ -68,8 +58,8 @@ _SHIM_ORACLE = """
     """
 
 
-@register("s14_s15_shim_board", _SHIM_ORACLE, tables=("part", "documents"))
-def s14_s15_shim_board(spark: SparkSession, sf_dir: str) -> DataFrame:
+@register("s14_s15_shim_board", _SHIM_ORACLE, tables=("part", "documents"), writes=True)
+def s14_s15_shim_board(spark: SparkSession, sf_dir: str, out_dir: str) -> DataFrame:
     """See module docstring. Unified (leg, k, c1..c5) schema:
     vcf leg — k=pos, c1=chrom, c2=id, c3=ref, c4=alt,
     c5=qual/filter/info/format; fasta leg — k=sequence length,
@@ -81,9 +71,8 @@ def s14_s15_shim_board(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from prohap_spark.sources.vcf import csv_to_vcf, read_vcf, write_vcf
 
-    tag_dir = os.path.basename(sf_dir.rstrip("/"))
-    vcf_dir = f"{_RT_DIR}/{tag_dir}/vcf"
-    fasta_dir = f"{_RT_DIR}/{tag_dir}/fasta"
+    vcf_dir = f"{out_dir}/vcf"
+    fasta_dir = f"{out_dir}/fasta"
 
     # --- S14 leg: custom-variant CSV shape -> VCF -> text -> parse ---
     p = spark.read.parquet(f"{sf_dir}/part.parquet").where(F.col("p_partkey") < 500)

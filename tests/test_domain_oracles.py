@@ -5,6 +5,7 @@ order-insensitive value hash."""
 
 import importlib
 import os
+import tempfile
 
 import pytest
 
@@ -13,7 +14,7 @@ from tests.oracles import ORACLES, TPCH_DIR, normalized_rows, value_hash
 for _mod in (
     "domain_oracle", "force_rf", "gene_header", "indel_haplo", "junction",
     "junction_haplo", "minus_strand", "peptide_board", "peptide_grid",
-    "shim_board", "start_codon", "threeexon", "threeexon_haplo",
+    "roundtrip", "shim_board", "start_codon", "threeexon", "threeexon_haplo",
 ):
     importlib.import_module(f"tests.oracles.{_mod}")
 
@@ -53,7 +54,7 @@ def results(spark, duck):
 
 
 def run_both(spark, duck, name):
-    fn, sql, tables = ORACLES[name]
+    fn, sql, tables, writes = ORACLES[name]
     if tables:
         if not os.path.isdir(TPCH_DIR):
             pytest.skip(f"TPC-H tables not found at {TPCH_DIR}")
@@ -62,15 +63,18 @@ def run_both(spark, duck, name):
                 f"CREATE OR REPLACE VIEW {t} AS "
                 f"SELECT * FROM read_parquet('{TPCH_DIR}/{t}.parquet')"
             )
-    sdf = fn(spark, TPCH_DIR)
-    s_cols, s_rows = sdf.columns, [tuple(r) for r in sdf.collect()]
+    # a writer's frame is lazy and reads its sink output only when
+    # collected, so the directory must outlive the collect
+    with tempfile.TemporaryDirectory(prefix=f"oracle_{name}_") as out_dir:
+        sdf = fn(spark, TPCH_DIR, out_dir) if writes else fn(spark, TPCH_DIR)
+        s_cols, s_rows = sdf.columns, [tuple(r) for r in sdf.collect()]
     res = duck.execute(sql)
     d_cols, d_rows = [c[0] for c in res.description], res.fetchall()
     return s_cols, s_rows, d_cols, d_rows
 
 
 def test_all_oracles_registered():
-    assert len(ORACLES) == 19
+    assert len(ORACLES) == 25
 
 
 @pytest.mark.parametrize("name", sorted(ORACLES))

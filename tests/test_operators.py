@@ -1,13 +1,11 @@
 """Operator equivalence/property tests: binned interval join ==
 broadcast-BNLJ reference plan; as-of join == pandas merge_asof;
-cosine top-k == numpy; minhash determinism; islands invariants."""
+minhash determinism; islands invariants."""
 
 import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
-
-from prohap_spark.queries.simsearch import sim_bruteforce_topk as _brute_topk
 
 
 @pytest.fixture(scope="module")
@@ -205,31 +203,6 @@ def test_asof_join_exact_ties_both_directions(spark):
             )
 
 
-def test_cosine_topk_equals_numpy(spark, rng):
-    from prohap_spark.operators.similarity import cosine_topk
-
-    Q = rng.normal(size=(5, 16)).astype(np.float32)
-    C = rng.normal(size=(40, 16)).astype(np.float32)
-    qdf = spark.createDataFrame(
-        [(i, Q[i].tolist()) for i in range(5)], ["qid", "vec"]
-    )
-    cdf = spark.createDataFrame(
-        [(100 + i, C[i].tolist()) for i in range(40)], ["cid", "vec"]
-    )
-    out = cosine_topk(qdf, cdf, "qid", "cid", "vec", k=3)
-    got = {
-        (r["qid"], r["rank"]): r["cid"] for r in out.toDF("qid", "cid", "cosine", "rank").collect()
-    }
-    sims = (Q.astype(np.float64) @ C.astype(np.float64).T) / (
-        np.linalg.norm(Q.astype(np.float64), axis=1)[:, None]
-        * np.linalg.norm(C.astype(np.float64), axis=1)[None, :]
-    )
-    for qi in range(5):
-        order = np.argsort(-sims[qi])[:3]
-        for rank, ci in enumerate(order, start=1):
-            assert got[(qi, rank)] == 100 + ci
-
-
 def test_minhash_deterministic_across_runs(spark):
     from prohap_spark.operators.dedup import minhash_dedup_pairs
 
@@ -284,86 +257,6 @@ def test_simhash_near_duplicates_close(spark):
     ham = lambda a, b: bin(a ^ b).count("1")  # noqa: E731
     assert ham(sig[1], sig[2]) < ham(sig[1], sig[3])
     assert ham(sig[1], sig[2]) < ham(sig[2], sig[3])
-
-
-def test_lsh_ann_recall(spark):
-    """Pinned recall@5 of the multi-table LSH ANN vs the exact
-    brute-force baseline (12 tables x 4 planes -> measured ~0.8 on the
-    near-orthogonal synthetic embeddings; 0.6 leaves margin for the
-    per-sf token sets). Guards against silent bucket-fn drift."""
-    from prohap_spark.queries import queries
-
-    q = queries()
-    sf = "/root/testdata/sf0.001"
-    brute = {(r["qid"], r["cid"]) for r in _brute_topk(spark, sf).collect()}
-    ann = {(r["qid"], r["cid"]) for r in q["sim_lsh_ann"](spark, sf).collect()}
-    assert len(brute) > 0
-    assert len(brute & ann) / len(brute) >= 0.6
-
-
-def test_hyperplane_bucket_rejects_oversized_vectors(spark):
-    import pyspark.errors
-
-    import pytest
-    from pyspark.sql import functions as F
-
-    from prohap_spark.operators.similarity import hyperplane_bucket_expr
-
-    df = spark.range(1).select(
-        F.array(*[F.lit(float(i)) for i in range(6)]).alias("v")
-    )
-    with pytest.raises(pyspark.errors.PySparkException):
-        df.select(hyperplane_bucket_expr("v", n_planes=2, max_dim=4)).collect()
-
-
-def test_ivf_ann_recall(spark):
-    """Pinned recall@5 of the IVF index (10 label-mean cells, nprobe=3)
-    vs the exact brute-force baseline. On near-orthogonal synthetic
-    embeddings cell membership is weakly informative, so the bound is
-    deliberately loose — it guards the plumbing (assignment, probing,
-    in-cell ranking), not the embedding geometry."""
-    from prohap_spark.queries.simsearch import sim_ivf_ann
-
-    sf = "/root/testdata/sf0.001"
-    brute = {(r["qid"], r["cid"]) for r in _brute_topk(spark, sf).collect()}
-    ivf = sim_ivf_ann(spark, sf).collect()
-    hits = {(r["qid"], r["cid"]) for r in ivf}
-    assert len(brute) > 0
-    assert len(brute & hits) / len(brute) >= 0.25
-    # every query returns exactly k=5 ranked rows (corpus >> k per cell)
-    from collections import Counter
-
-    per_q = Counter(r["qid"] for r in ivf)
-    assert all(v == 5 for v in per_q.values())
-
-
-def test_embedding_near_dup_sound_and_recalls(spark):
-    """embedding_near_dup_pairs: every emitted pair truly clears the
-    threshold (soundness — LSH may drop pairs but must never invent
-    them), ids are ordered, and on a planted near-dup (two vectors at
-    cosine ~0.999) the pair IS found — a same-direction pair falls in
-    the same half-space of every hyperplane, so recall on true
-    near-dups is structural, not probabilistic."""
-    import math
-
-    from pyspark.sql import functions as F
-
-    from prohap_spark.operators.similarity import embedding_near_dup_pairs
-
-    base = [math.sin(i * 0.7) for i in range(16)]
-    near = [x + (0.001 if i == 0 else 0.0) for i, x in enumerate(base)]
-    far = [math.cos(i * 1.3) for i in range(16)]
-    df = spark.createDataFrame(
-        [(1, base), (2, near), (3, far)], ["vec_id", "embedding"]
-    ).withColumn("embedding", F.col("embedding").cast("array<float>"))
-    out = embedding_near_dup_pairs(
-        df, "vec_id", "embedding", threshold=0.9, n_planes=4, n_tables=4
-    ).collect()
-    pairs = {(r["id_a"], r["id_b"]): r["cosine"] for r in out}
-    assert (1, 2) in pairs
-    assert pairs[(1, 2)] >= 0.999
-    assert all(a < b for a, b in pairs)
-    assert all(c >= 0.9 for c in pairs.values())
 
 
 def test_simhash_near_pairs_match_bruteforce_ball(spark):
@@ -513,28 +406,6 @@ def test_grouped_row_number_equals_grouped_window(spark, rng):
     assert got == want
 
 
-def test_sq_ann_matches_bruteforce_topk(spark):
-    """int8 quantization of the 64-dim synthetic embeddings preserves
-    enough resolution that the reranked top-5 equals the exact
-    brute-force top-5 (deterministic fixture — pinned as equality)."""
-    from prohap_spark.queries import queries
-
-    q = queries()
-    sf = "/root/testdata/sf0.001"
-    brute = {
-        (r["qid"], r["rank"]): r["cid"]
-        for r in _brute_topk(spark, sf).collect()
-    }
-    from prohap_spark.queries.simsearch import sim_sq_ann
-
-    sq = {
-        (r["qid"], r["rank"]): r["cid"]
-        for r in sim_sq_ann(spark, sf).collect()
-    }
-    assert len(brute) > 0
-    assert sq == brute
-
-
 def test_connected_components_random_vs_union_find(spark, rng):
     """Property check on a seeded random graph: component labels must
     equal a reference union-find's min-id labels."""
@@ -674,30 +545,6 @@ def test_connected_components_200_chain_log_rounds(spark):
     assert all(r["component"] == 0 for r in rows)
 
 
-def test_pq_ann_recall_and_shape(spark):
-    """Pinned recall@5 of PQ-ADC (4 × 16-dim subspaces, label-mean
-    codebook, rerank 20) vs the exact brute-force baseline. As with
-    IVF, near-orthogonal synthetic embeddings make coarse codes weakly
-    informative, so the floor guards the plumbing (codebook, encode
-    argmax, integer-LUT ADC, rerank), not the geometry. Every query
-    must return exactly k ranked rows."""
-    from collections import Counter
-
-    from prohap_spark.queries import queries
-
-    q = queries()
-    sf = "/root/testdata/sf0.001"
-    brute = {(r["qid"], r["cid"]) for r in _brute_topk(spark, sf).collect()}
-    from prohap_spark.queries.simsearch import sim_pq_ann
-
-    pq = sim_pq_ann(spark, sf).collect()
-    hits = {(r["qid"], r["cid"]) for r in pq}
-    assert len(brute) > 0
-    assert len(brute & hits) / len(brute) >= 0.25
-    per_q = Counter(r["qid"] for r in pq)
-    assert all(v == 5 for v in per_q.values())
-
-
 def test_bpe_encode_word_reference_cases():
     """Hand-derived BPE traces against the fixed merge vocabulary —
     rank order matters: 'the' must merge t+h first (rank 0), then
@@ -818,82 +665,6 @@ def test_pack_context_windows_invariants(spark, rng):
             assert tot == 32, (shard, seq, tot)
         else:
             assert 1 <= tot <= 32
-
-
-def test_semantic_dedup_keep_smallest_id(spark):
-    """Literal fixture: two near-identical vectors in one cell — the
-    larger id is flagged, the smaller kept; an orthogonal vector in
-    its own cell has best_cos NULL and survives."""
-    from prohap_spark.operators.similarity import (
-        semantic_dedup_flags,
-        train_centroids_by_label,
-    )
-
-    rows = [
-        (0, [1.0, 0.0, 0.0, 0.0], "a"),
-        (1, [0.999, 0.01, 0.0, 0.0], "a"),
-        (2, [0.0, 1.0, 0.0, 0.0], "b"),
-        (3, [0.5, 0.6, 0.0, 0.0], "a"),
-    ]
-    e = spark.createDataFrame(rows, ["vec_id", "embedding", "label"])
-    cent = train_centroids_by_label(e, "label", "embedding")
-    out = {
-        r["vec_id"]: r
-        for r in semantic_dedup_flags(
-            e, cent, "vec_id", "embedding", threshold=0.95
-        ).collect()
-    }
-    assert not out[0]["is_dup"] and out[0]["best_cos"] is None
-    assert out[1]["is_dup"] and out[1]["best_cos"] > 0.999
-    assert not out[2]["is_dup"] and out[2]["best_cos"] is None
-    # vec 3 sits in cell 'a' with 0 and 1 but is not close enough
-    assert not out[3]["is_dup"] and out[3]["best_cos"] < 0.95
-
-
-def test_semantic_dedup_cell_cap_and_stats(spark):
-    """max_cell_size: the hot cell (3 members, would flag its
-    near-identical pair) is skipped in the pairwise pass — its members
-    come back un-flagged with best_cos NULL — while the under-cap cell
-    still flags; semantic_cell_stats reports the truncation."""
-    from prohap_spark.operators.similarity import (
-        semantic_cell_stats,
-        semantic_dedup_flags,
-        train_centroids_by_label,
-    )
-
-    rows = [
-        # cell 'a': 3 members, two near-identical
-        (0, [1.0, 0.0, 0.0, 0.0], "a"),
-        (1, [0.999, 0.01, 0.0, 0.0], "a"),
-        (2, [0.9, 0.1, 0.0, 0.0], "a"),
-        # cell 'b': 2 near-identical members
-        (3, [0.0, 1.0, 0.0, 0.0], "b"),
-        (4, [0.0, 0.999, 0.01, 0.0], "b"),
-    ]
-    e = spark.createDataFrame(rows, ["vec_id", "embedding", "label"])
-    cent = train_centroids_by_label(e, "label", "embedding")
-    capped = {
-        r["vec_id"]: r
-        for r in semantic_dedup_flags(
-            e, cent, "vec_id", "embedding", threshold=0.95, max_cell_size=2
-        ).collect()
-    }
-    # hot cell skipped: nothing flagged, no best_cos
-    for v in (0, 1, 2):
-        assert not capped[v]["is_dup"] and capped[v]["best_cos"] is None
-    # under-cap cell unaffected by the cap
-    assert capped[4]["is_dup"] and capped[4]["best_cos"] > 0.99
-    assert not capped[3]["is_dup"]
-    stats = {
-        r["cell_id"]: r
-        for r in semantic_cell_stats(
-            e, cent, "vec_id", "embedding", max_cell_size=2
-        ).collect()
-    }
-    hot = next(r for r in stats.values() if r["cell_size"] == 3)
-    assert hot["capped"] and hot["n_pairs"] == 3
-    small = next(r for r in stats.values() if r["cell_size"] == 2)
-    assert not small["capped"] and small["n_pairs"] == 1
 
 
 def test_winnowing_guarantee_and_short_docs(spark):
@@ -1117,58 +888,6 @@ def test_quality_classifier_learns_heuristic_signal(spark):
         assert out.where((F.col("p_good") < 0) | (F.col("p_good") > 1)).count() == 0
     finally:
         out.unpersist()
-
-
-def test_knn_classify_label_transfer(spark):
-    """KNN label transfer on a SEPARABLE fixture (the sf embeddings
-    carry geometrically random labels, so the registered query only
-    pins vote mechanics): three orthogonal clusters with deterministic
-    jitter must classify every held-out probe correctly, and a
-    constructed 2-2-1 vote tie must break to the SMALLER label."""
-    from pyspark.sql import functions as F
-
-    from prohap_spark.operators.similarity import knn_classify
-
-    # clusters around axes e0, e1, e2 of an 8-dim space; jitter on a
-    # disjoint axis so cosine-to-center stays ordered and deterministic
-    rows = []
-    for lab in range(3):
-        for j in range(6):
-            v = [0.0] * 8
-            v[lab] = 1.0
-            v[3 + lab] = 0.01 * (j + 1)  # jitter, same direction per cluster
-            rows.append((lab * 10 + j, v, lab))
-    corpus = spark.createDataFrame(
-        rows, "vec_id long, embedding array<float>, label int"
-    )
-    probes = spark.createDataFrame(
-        [(100 + lab, [1.0 if i == lab else 0.0 for i in range(8)]) for lab in range(3)],
-        "vec_id long, embedding array<float>",
-    )
-    out = {
-        r["qid"]: r["pred_label"]
-        for r in knn_classify(probes, corpus, "vec_id", "embedding", "label").collect()
-    }
-    assert out == {100: 0, 101: 1, 102: 2}
-
-    # vote tie: probe's 5 NN carry labels [2, 2, 1, 1, 0] (cosine
-    # strictly ordered by the e0 component); 2-2 tie -> smaller label 1
-    tie_corpus = spark.createDataFrame(
-        [
-            (1, [0.99, 0.1, 0.0], 2),
-            (2, [0.98, 0.1, 0.0], 2),
-            (3, [0.97, 0.1, 0.0], 1),
-            (4, [0.96, 0.1, 0.0], 1),
-            (5, [0.95, 0.1, 0.0], 0),
-            (6, [0.10, 1.0, 0.0], 0),  # outside the top-5
-        ],
-        "vec_id long, embedding array<float>, label int",
-    )
-    tie_probe = spark.createDataFrame(
-        [(200, [1.0, 0.0, 0.0])], "vec_id long, embedding array<float>"
-    )
-    got = knn_classify(tie_probe, tie_corpus, "vec_id", "embedding", "label").collect()
-    assert [(r["qid"], r["pred_label"], r["n_votes"]) for r in got] == [(200, 1, 2)]
 
 
 def test_incremental_dedup_flags(spark):
@@ -1469,72 +1188,6 @@ def test_pagerank_empty_graph(spark):
 
     empty = spark.createDataFrame([], "src long, dst long")
     assert pagerank(empty).collect() == []
-
-
-def test_kmeans_matches_numpy_lloyd(spark):
-    """train_centroids_kmeans must match a pure-numpy Lloyd run with
-    the identical deterministic seeding (k smallest md5(id)) and
-    lower-index tie-breaks, on a well-separated 3-cluster fixture
-    (margins >> double-rounding noise, so assignments are stable)."""
-    import hashlib
-
-    from prohap_spark.operators.similarity import train_centroids_kmeans
-
-    rng = np.random.default_rng(11)
-    centers = np.array([[10.0, 0.0, 0.0], [0.0, 10.0, 0.0], [0.0, 0.0, 10.0]])
-    pts = np.vstack([centers[i % 3] + rng.normal(0, 0.3, 3) for i in range(90)])
-    rows = [(i, [float(x) for x in pts[i]]) for i in range(90)]
-    df = spark.createDataFrame(rows, "vid long, vec array<double>")
-    got = {
-        r["cell_id"]: np.array(r["centroid"])
-        for r in train_centroids_kmeans(df, "vid", "vec", k=3, n_iter=5).collect()
-    }
-
-    order = sorted(range(90), key=lambda i: hashlib.md5(str(i).encode()).hexdigest())
-    cents = pts[order[:3]].copy()
-    for _ in range(5):
-        d2 = ((pts[:, None, :] - cents[None, :, :]) ** 2).sum(axis=2)
-        cell = d2.argmin(axis=1)  # argmin takes the first minimum: same tie-break
-        for j in range(3):
-            m = cell == j
-            if m.any():
-                cents[j] = pts[m].mean(axis=0)
-    for j in range(3):
-        assert np.abs(got[j] - cents[j]).max() < 1e-6
-
-
-def test_ivf_with_kmeans_centroids_recall(spark):
-    """The trained-quantizer path: kmeans centroids plugged into the
-    UNCHANGED ivf_ann_topk must reach the same kind of recall the
-    by-label centroids give (>= 0.6 @ top-5 vs brute force at
-    sf0.001, nprobe 3 of 8 cells)."""
-    from pyspark.sql import functions as F
-
-    from prohap_spark.operators.similarity import (
-        ivf_ann_topk,
-        train_centroids_kmeans,
-    )
-    from prohap_spark.queries import queries
-
-    sf = "/root/testdata/sf0.001"
-    e = spark.read.parquet(f"{sf}/embeddings.parquet")
-    corpus = e.where(F.col("vec_id") >= 10)
-    probes = e.where(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("qid"), F.col("embedding")
-    )
-    cents = train_centroids_kmeans(corpus, "vec_id", "embedding", k=8, n_iter=4)
-    ann = {
-        (r["qid"], r["vec_id"])
-        for r in ivf_ann_topk(
-            probes, corpus, cents, "qid", "vec_id", "embedding", k=5, nprobe=3
-        ).collect()
-    }
-    brute = {
-        (r["qid"], r["cid"])
-        for r in _brute_topk(spark, sf).collect()
-    }
-    assert len(brute) > 0
-    assert len(brute & ann) / len(brute) >= 0.6
 
 
 def test_sampling_and_substring_empty_inputs(spark):
@@ -1856,54 +1509,6 @@ def test_pagerank_micro_tracks_float_pagerank_and_conserves_mass(spark):
     assert again == got  # bit-exact under re-partitioning
 
 
-def test_kmeans_ivf_quantized_recall_floor(spark):
-    """The quantized integer k-means IVF must reach >= 0.6 recall@5
-    vs exact brute-force L2 on the quantized grid (nprobe=2 of k=4
-    cells), and the exact-arithmetic pipeline must be bit-reproducible
-    across partitionings."""
-    from prohap_spark.operators.similarity import (
-        ivf_l2_topk_q,
-        quantize_vec,
-        train_centroids_kmeans_q,
-    )
-
-    rng = np.random.default_rng(5)
-    # 4 separated clusters in 8-d plus noise
-    centers = rng.normal(0, 1, (4, 8))
-    vecs = []
-    for i in range(200):
-        c = centers[i % 4]
-        vecs.append((i, [float(x) for x in c + rng.normal(0, 0.15, 8)]))
-    df = spark.createDataFrame(vecs, "vec_id long, embedding array<float>")
-    q = df.where(F.col("vec_id") < 20)
-    c = df.where(F.col("vec_id") >= 20)
-
-    cents = train_centroids_kmeans_q(c, "vec_id", "embedding", k=4, n_iter=3)
-    got = ivf_l2_topk_q(q, c, cents, "vec_id", "vec_id", "embedding", k=5, nprobe=2)
-    ann = {}
-    for r in got.collect():
-        ann.setdefault(r["qid"], set()).add(r["cid"])
-
-    # exact integer brute force
-    qq = {r["vec_id"]: r["qv"] for r in q.select("vec_id", quantize_vec(F.col("embedding")).alias("qv")).collect()}
-    cc = {r["vec_id"]: r["qv"] for r in c.select("vec_id", quantize_vec(F.col("embedding")).alias("qv")).collect()}
-    hits = tot = 0
-    for qid, qv in qq.items():
-        dists = sorted(
-            (sum((a - b) * (a - b) for a, b in zip(qv, cv)), cid)
-            for cid, cv in cc.items()
-        )
-        truth = {cid for _, cid in dists[:5]}
-        hits += len(truth & ann[qid])
-        tot += 5
-    assert hits / tot >= 0.6, hits / tot
-
-    cents2 = train_centroids_kmeans_q(
-        c.repartition(13), "vec_id", "embedding", k=4, n_iter=3
-    )
-    assert cents2 == cents  # integer trainer is partitioning-invariant
-
-
 def test_drop_positions_matches_python_reference(spark):
     """Property pin for the scrub-reassembly core: _drop_positions
     over randomized (items, removal-set) rows must equal the obvious
@@ -2174,130 +1779,6 @@ def test_cdc_chunking_shift_resistance_and_bounds(spark):
     assert stats[3]["n_dup_chunks"] > 0
     assert stats[1]["n_dup_chunks"] > 0
     assert stats[3]["n_dup_chunks"] < stats[3]["n_chunks"]  # fresh part kept
-
-
-def test_lsh_multiprobe_improves_recall(spark):
-    """Multi-probe LSH (r10): (a) the probe array's base bucket equals
-    hyperplane_bucket_expr exactly (corpus buckets must collide with
-    the query's base probe); (b) every perturbed bucket differs from
-    the base by EXACTLY one bit; (c) recall@5 vs exact cosine is
-    monotone in n_probes and strictly improves by probes=4 on a
-    single-table run — the recall-per-table trade the method buys
-    without growing the index."""
-    import random as _random
-
-    from prohap_spark.operators.similarity import (
-        cosine_topk,
-        hyperplane_bucket_expr,
-        hyperplane_probe_buckets,
-        lsh_ann_topk,
-    )
-
-    rng = _random.Random(3)
-    corpus = spark.createDataFrame(
-        [(i, [rng.uniform(-1, 1) for _ in range(16)]) for i in range(400)],
-        "vid long, emb array<double>",
-    )
-    chk = corpus.select(
-        hyperplane_bucket_expr("emb", 8, seed="hpX").alias("b"),
-        hyperplane_probe_buckets("emb", 8, seed="hpX", n_probes=3).alias("pb"),
-    )
-    assert chk.where(F.col("b") != F.col("pb")[0]).count() == 0
-    ham = chk.select(
-        F.expr(
-            "aggregate(slice(pb, 2, 3), 0, (acc, p) -> acc + "
-            "aggregate(sequence(1, length(b)), 0, (a, i) -> a + "
-            "CASE WHEN substring(b, i, 1) <> substring(p, i, 1) THEN 1 ELSE 0 END))"
-        ).alias("d")
-    ).agg(F.min("d").alias("lo"), F.max("d").alias("hi")).collect()[0]
-    assert (ham["lo"], ham["hi"]) == (3, 3)  # 3 probes x exactly 1 flip
-
-    queries = corpus.where(F.col("vid") % 29 == 0).select(
-        F.col("vid").alias("qid"), "emb"
-    )
-    truth = {
-        (r["qid"], r["vid"])
-        for r in cosine_topk(queries, corpus, "qid", "vid", "emb", k=5).collect()
-    }
-
-    def recall(n_probes):
-        got = {
-            (r["qid"], r["vid"])
-            for r in lsh_ann_topk(
-                queries, corpus, "qid", "vid", "emb",
-                k=5, n_planes=10, n_tables=1, n_probes=n_probes,
-            ).collect()
-        }
-        return len(got & truth) / len(truth)
-
-    r0, r2, r4 = recall(0), recall(2), recall(4)
-    assert r0 <= r2 <= r4, (r0, r2, r4)
-    assert r4 > r0, (r0, r4)
-
-
-def test_ivf_index_persist_probe_identity_and_torn_read(spark, tmp_path):
-    """The persisted IVF artifact (r10): probing the written index
-    must return EXACTLY what ivf_ann_topk computes over the original
-    corpus (same ranks, same rounded cosines — vectors and norms
-    round-trip parquet doubles bit-exactly), the cells table must be
-    laid out partitioned by cell_id (the inverted-file on-disk claim),
-    and a torn cell directory must fail LOUD on read — a silently
-    truncated cell table would just lower recall, which nothing
-    downstream would catch."""
-    import os
-
-    import pytest as _pytest
-
-    from prohap_spark.operators.similarity import (
-        ivf_ann_topk,
-        ivf_ann_topk_from_index,
-        read_ivf_index,
-        train_centroids_by_label,
-        write_ivf_index,
-    )
-
-    import random as _random
-
-    rng = _random.Random(5)
-    corpus = spark.createDataFrame(
-        [
-            (i, f"lab{i % 4}", [rng.uniform(-1, 1) for _ in range(8)])
-            for i in range(300)
-        ],
-        "vec_id long, label string, embedding array<double>",
-    )
-    queries = corpus.where(F.col("vec_id") % 37 == 0).select(
-        F.col("vec_id").alias("qid"), "embedding"
-    )
-    cents = train_centroids_by_label(corpus, "label", "embedding")
-
-    path = str(tmp_path / "ivf")
-    manifests = write_ivf_index(corpus, cents, "vec_id", "embedding", path)
-    assert manifests["cells"]["n_rows"] == 300
-    # inverted-file layout: one directory per cell
-    assert any(
-        d.startswith("cell_id=") for d in os.listdir(f"{path}/cells")
-    )
-
-    direct = {
-        (r["qid"], r["vec_id"], r["cosine"], r["rank"])
-        for r in ivf_ann_topk(
-            queries, corpus, cents, "qid", "vec_id", "embedding", k=5, nprobe=2
-        ).collect()
-    }
-    via_index = {
-        (r["qid"], r["vec_id"], r["cosine"], r["rank"])
-        for r in ivf_ann_topk_from_index(queries, path, "qid", k=5, nprobe=2).collect()
-    }
-    assert via_index == direct and len(direct) > 0
-
-    # torn cell directory: delete one cell's part-file -> loud refusal
-    cell_dirs = [d for d in os.listdir(f"{path}/cells") if d.startswith("cell_id=")]
-    victim_dir = os.path.join(path, "cells", sorted(cell_dirs)[0])
-    victim = [f for f in os.listdir(victim_dir) if f.endswith(".parquet")][0]
-    os.remove(os.path.join(victim_dir, victim))
-    with _pytest.raises(ValueError, match="does not match its|torn/partial"):
-        read_ivf_index(spark, path)
 
 
 def test_dedup_index_torn_append_repair_resumes_ingest(spark, tmp_path):
@@ -4125,336 +3606,19 @@ def test_preference_pairs_properties(spark):
         assert r["chosen"] % 37 == r["pid"] and r["rejected"] % 37 == r["pid"]
 
 
-def test_lsh_index_persist_probe_identity_and_layout(spark, tmp_path):
-    """The persisted LSH artifact (r14): probing the written index
-    must return EXACTLY what lsh_ann_topk computes over the original
-    corpus (same candidates, cosines, ranks — the index is a
-    materialization of the bucketing, not an approximation of it),
-    the postings table must be laid out partitioned by bucket (the
-    probe's partition-pruning claim), and a tampered postings
-    manifest must fail LOUD on read."""
-    import os
-
-    import pytest as _pytest
-
-    from prohap_spark.operators.similarity import (
-        lsh_ann_topk,
-        lsh_ann_topk_from_index,
-        write_lsh_index,
-    )
-
-    import random as _random
-
-    rng = _random.Random(7)
-    corpus = spark.createDataFrame(
-        [(i, [rng.uniform(-1, 1) for _ in range(8)]) for i in range(300)],
-        "vec_id long, embedding array<double>",
-    )
-    queries = corpus.where(F.col("vec_id") % 41 == 0).select(
-        F.col("vec_id").alias("qid"), "embedding"
-    )
-
-    path = str(tmp_path / "lsh")
-    manifests = write_lsh_index(
-        corpus, "vec_id", "embedding", path,
-        n_planes=3, n_tables=6, quantize_micro=True,
-    )
-    assert manifests["postings"]["n_rows"] == 300 * 6  # one row per (table, vec)
-    assert any(d.startswith("bucket=") for d in os.listdir(f"{path}/postings"))
-
-    direct = {
-        (r["qid"], r["vec_id"], r["cosine"], r["rank"])
-        for r in lsh_ann_topk(
-            queries, corpus, "qid", "vec_id", "embedding",
-            k=5, n_planes=3, n_tables=6, score_decimals=6, quantize_micro=True,
-        ).collect()
-    }
-    via_index = {
-        (r["qid"], r["vec_id"], r["cosine"], r["rank"])
-        for r in lsh_ann_topk_from_index(
-            queries, path, "qid", k=5, score_decimals=6
-        ).collect()
-    }
-    assert via_index == direct and len(direct) > 0
-
-    # torn/tampered index fails loud, never silently loses recall
-    import json
-
-    mpath = os.path.join(path, "postings", "_dedup_index_manifest.json")
-    m = json.load(open(mpath))
-    m["n_rows"] += 1
-    json.dump(m, open(mpath, "w"))
-    with _pytest.raises(ValueError):
-        lsh_ann_topk_from_index(queries, path, "qid", k=5).collect()
-
-
-def test_ivf_segment_append_probe_identity_and_compaction(spark, tmp_path):
-    """Segmented IVF ingest (r14): append_ivf_segment assigns the
-    delta against the FROZEN persisted quantizer and writes its own
-    cell_id-partitioned segment — probing the segmented read must
-    equal ivf_ann_topk over base ∪ delta at the same centroids,
-    exactly; compact_ivf_segments folds the segments away without
-    moving a value; a torn segment fails loud on read."""
-    import os
-    import random as _random
-
-    import pytest as _pytest
-
-    from prohap_spark.operators.similarity import (
-        append_ivf_segment,
-        compact_ivf_segments,
-        ivf_ann_topk,
-        ivf_ann_topk_from_index,
-        read_ivf_index,
-        train_centroids_by_label,
-        write_ivf_index,
-    )
-
-    rng = _random.Random(5)
-    rows = [
-        (i, f"lab{i % 4}", [rng.uniform(-1, 1) for _ in range(8)])
-        for i in range(300)
-    ]
-    schema = "vec_id long, label string, embedding array<double>"
-    full = spark.createDataFrame(rows, schema)
-    base = full.where(F.col("vec_id") < 240)
-    delta1 = full.where((F.col("vec_id") >= 240) & (F.col("vec_id") < 270))
-    delta2 = full.where(F.col("vec_id") >= 270)
-    queries = full.where(F.col("vec_id") % 37 == 0).select(
-        F.col("vec_id").alias("qid"), "embedding"
-    )
-    # quantizer frozen at index-build time, trained on the base only
-    cents = train_centroids_by_label(base, "label", "embedding")
-
-    path = str(tmp_path / "ivf")
-    write_ivf_index(base, cents, "vec_id", "embedding", path)
-    m1 = append_ivf_segment(spark, path, delta1)
-    m2 = append_ivf_segment(spark, path, delta2)
-    assert m1["segment"].endswith(".cells_seg_00000")
-    assert m2["segment"].endswith(".cells_seg_00001")
-    assert m1["n_rows"] == 30 and m2["n_rows"] == 30
-    # segments keep the inverted-file layout
-    assert any(
-        d.startswith("cell_id=") for d in os.listdir(m1["segment"])
-    )
-
-    direct = {
-        (r["qid"], r["vec_id"], r["cosine"], r["rank"])
-        for r in ivf_ann_topk(
-            queries, full, cents, "qid", "vec_id", "embedding", k=5, nprobe=2
-        ).collect()
-    }
-    via_seg = {
-        (r["qid"], r["vec_id"], r["cosine"], r["rank"])
-        for r in ivf_ann_topk_from_index(
-            queries, path, "qid", k=5, nprobe=2
-        ).collect()
-    }
-    assert via_seg == direct and len(direct) > 0
-
-    # re-ingesting identical rows dedups cleanly at read time
-    append_ivf_segment(spark, path, delta1)
-    cells, _c, _m = read_ivf_index(spark, path)
-    assert cells.count() == 300
-
-    # compaction folds everything flat without moving a value
-    stats = compact_ivf_segments(spark, path)
-    assert stats["segments_folded"] == 3 and stats["n_rows"] == 300
-    assert not any(
-        d.startswith(".cells_seg_") for d in os.listdir(path)
-    )
-    via_flat = {
-        (r["qid"], r["vec_id"], r["cosine"], r["rank"])
-        for r in ivf_ann_topk_from_index(
-            queries, path, "qid", k=5, nprobe=2
-        ).collect()
-    }
-    assert via_flat == direct
-    assert compact_ivf_segments(spark, path)["segments_folded"] == 0
-
-    # torn segment: drop a part-file from a fresh segment -> loud read
-    m3 = append_ivf_segment(spark, path, delta1)
-    seg = m3["segment"]
-    victim_dirs = [d for d in os.listdir(seg) if d.startswith("cell_id=")]
-    vdir = os.path.join(seg, sorted(victim_dirs)[0])
-    victim = [f for f in os.listdir(vdir) if f.endswith(".parquet")][0]
-    os.remove(os.path.join(vdir, victim))
-    with _pytest.raises(ValueError, match="does not match its|torn/partial"):
-        read_ivf_index(spark, path)
-
-
-def test_lsh_segment_append_probe_identity_and_compaction(spark, tmp_path):
-    """Segmented LSH ingest (r14): bucket keys derive from meta's
-    frozen parameters, so probing the segmented read must equal
-    lsh_ann_topk over base ∪ delta exactly; compaction folds both
-    tables without moving a value; crash-leftover segments (rows
-    already folded) are read-time no-ops."""
-    import os
-    import random as _random
-
-    from prohap_spark.operators.similarity import (
-        append_lsh_segment,
-        compact_lsh_segments,
-        lsh_ann_topk,
-        lsh_ann_topk_from_index,
-        read_lsh_index,
-        write_lsh_index,
-    )
-
-    rng = _random.Random(7)
-    rows = [(i, [rng.uniform(-1, 1) for _ in range(8)]) for i in range(300)]
-    full = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    base = full.where(F.col("vec_id") < 250)
-    delta = full.where(F.col("vec_id") >= 250)
-    queries = full.where(F.col("vec_id") % 41 == 0).select(
-        F.col("vec_id").alias("qid"), "embedding"
-    )
-
-    path = str(tmp_path / "lsh")
-    write_lsh_index(
-        base, "vec_id", "embedding", path,
-        n_planes=3, n_tables=6, quantize_micro=True,
-    )
-    m = append_lsh_segment(spark, path, delta)
-    assert m["postings"]["n_rows"] == 50 * 6
-    assert m["vectors"]["n_rows"] == 50
-    seg_dir = os.path.join(path, ".postings_seg_00000")
-    assert any(d.startswith("bucket=") for d in os.listdir(seg_dir))
-
-    direct = {
-        (r["qid"], r["vec_id"], r["cosine"], r["rank"])
-        for r in lsh_ann_topk(
-            queries, full, "qid", "vec_id", "embedding",
-            k=5, n_planes=3, n_tables=6, score_decimals=6, quantize_micro=True,
-        ).collect()
-    }
-    via_seg = {
-        (r["qid"], r["vec_id"], r["cosine"], r["rank"])
-        for r in lsh_ann_topk_from_index(
-            queries, path, "qid", k=5, score_decimals=6
-        ).collect()
-    }
-    assert via_seg == direct and len(direct) > 0
-
-    # idempotent re-ingest dedups at read time
-    append_lsh_segment(spark, path, delta)
-    postings, vectors, _meta = read_lsh_index(spark, path)
-    assert vectors.count() == 300 and postings.count() == 300 * 6
-
-    # compaction folds flat without moving a value; repeat is a no-op
-    stats = compact_lsh_segments(spark, path)
-    assert stats["segments_folded"] == 2
-    assert stats["postings"]["n_rows"] == 300 * 6
-    assert stats["vectors"]["n_rows"] == 300
-    assert not any(d.startswith((".postings_seg_", ".vectors_seg_"))
-                   for d in os.listdir(path))
-    via_flat = {
-        (r["qid"], r["vec_id"], r["cosine"], r["rank"])
-        for r in lsh_ann_topk_from_index(
-            queries, path, "qid", k=5, score_decimals=6
-        ).collect()
-    }
-    assert via_flat == direct
-    assert compact_lsh_segments(spark, path)["segments_folded"] == 0
-
-
-def test_ivf_cell_stats_drift_signal(spark, tmp_path):
-    """ivf_cell_stats splits per-cell counts base vs delta: counts
-    must reconcile with the actual assignments, cells untouched by the
-    delta show n_delta=0, zero-segment indexes show an all-zero delta
-    column, and the counts survive compaction moving into n_base."""
-    import random as _random
-
-    from prohap_spark.operators.similarity import (
-        append_ivf_segment,
-        compact_ivf_segments,
-        ivf_cell_stats,
-        train_centroids_by_label,
-        write_ivf_index,
-    )
-
-    rng = _random.Random(5)
-    rows = [
-        (i, f"lab{i % 4}", [rng.uniform(-1, 1) for _ in range(8)])
-        for i in range(300)
-    ]
-    schema = "vec_id long, label string, embedding array<double>"
-    full = spark.createDataFrame(rows, schema)
-    base = full.where(F.col("vec_id") < 240)
-    delta = full.where(F.col("vec_id") >= 240)
-    cents = train_centroids_by_label(base, "label", "embedding")
-
-    path = str(tmp_path / "ivf")
-    write_ivf_index(base, cents, "vec_id", "embedding", path)
-    s0 = {r["cell_id"]: (r["n_base"], r["n_delta"])
-          for r in ivf_cell_stats(spark, path).collect()}
-    assert sum(n for n, _ in s0.values()) == 240
-    assert all(d == 0 for _, d in s0.values())
-
-    append_ivf_segment(spark, path, delta)
-    s1 = {r["cell_id"]: (r["n_base"], r["n_delta"])
-          for r in ivf_cell_stats(spark, path).collect()}
-    assert sum(n for n, _ in s1.values()) == 240
-    assert sum(d for _, d in s1.values()) == 60
-    # base counts unchanged by the append
-    for c, (n, _d) in s1.items():
-        assert n == s0.get(c, (0, 0))[0]
-
-    compact_ivf_segments(spark, path)
-    s2 = {r["cell_id"]: (r["n_base"], r["n_delta"])
-          for r in ivf_cell_stats(spark, path).collect()}
-    assert sum(n for n, _ in s2.values()) == 300
-    assert all(d == 0 for _, d in s2.values())
-
-
 def test_segment_append_empty_delta_noop(spark, tmp_path):
-    """Empty-delta ingest ticks are NO-OPS, never torn directories:
-    all three segment appenders (trgm, IVF, LSH) must leave the index
-    fully readable and value-identical, and the trgm case must also
-    no-op on a nonempty delta whose texts are too short to shingle."""
+    """Empty-delta ingest ticks are NO-OPS, never torn directories: the
+    trigram segment appender must leave the index fully readable, and
+    must also no-op on a nonempty delta whose texts are too short to
+    shingle."""
     import os
-    import random as _random
 
-    from prohap_spark.operators.similarity import (
-        append_ivf_segment,
-        append_lsh_segment,
-        read_ivf_index,
-        read_lsh_index,
-        train_centroids_by_label,
-        write_ivf_index,
-        write_lsh_index,
-    )
     from prohap_spark.operators.trgm import (
         append_trigram_segment,
         build_trigram_index,
         read_trigram_segments,
         write_trigram_index,
     )
-
-    rng = _random.Random(5)
-    vec = spark.createDataFrame(
-        [
-            (i, f"lab{i % 4}", [rng.uniform(-1, 1) for _ in range(8)])
-            for i in range(60)
-        ],
-        "vec_id long, label string, embedding array<double>",
-    )
-    empty_vec = vec.where(F.lit(False))
-
-    ivf = str(tmp_path / "ivf")
-    write_ivf_index(
-        vec, train_centroids_by_label(vec, "label", "embedding"),
-        "vec_id", "embedding", ivf,
-    )
-    assert append_ivf_segment(spark, ivf, empty_vec)["segment"] is None
-    assert not any(d.startswith(".") and "seg" in d for d in os.listdir(ivf))
-    assert read_ivf_index(spark, ivf)[0].count() == 60
-
-    lsh = str(tmp_path / "lsh")
-    write_lsh_index(vec, "vec_id", "embedding", lsh, n_planes=3, n_tables=4)
-    assert append_lsh_segment(spark, lsh, empty_vec)["segment"] is None
-    assert not any("seg" in d for d in os.listdir(lsh))
-    assert read_lsh_index(spark, lsh)[1].count() == 60
 
     docs = spark.createDataFrame(
         [(i, f"some document text number {i}") for i in range(20)],
@@ -4540,73 +3704,6 @@ def test_vacuum_index_never_touches_segments(spark, tmp_path):
     assert sorted(os.listdir(seg)) == seg_files
     assert read_trigram_segments(spark, path).count() == n_before
     assert stats is not None
-
-
-def test_ivf_compact_crash_restores_readable_index(spark, tmp_path, monkeypatch):
-    """compact_ivf_segments' reentrant-swap claim under injected
-    crashes: a failure at the staging rename restores the backup (the
-    finally branch) and the SEGMENTED index stays fully readable and
-    value-identical; the retried compaction then succeeds."""
-    import os
-    import random as _random
-
-    from prohap_spark.operators import similarity as sim
-
-    rng = _random.Random(5)
-    rows = [
-        (i, f"lab{i % 4}", [rng.uniform(-1, 1) for _ in range(8)])
-        for i in range(120)
-    ]
-    full = spark.createDataFrame(
-        rows, "vec_id long, label string, embedding array<double>"
-    )
-    base = full.where(F.col("vec_id") < 100)
-    delta = full.where(F.col("vec_id") >= 100)
-    cents = sim.train_centroids_by_label(base, "label", "embedding")
-    path = str(tmp_path / "ivf")
-    sim.write_ivf_index(base, cents, "vec_id", "embedding", path)
-    sim.append_ivf_segment(spark, path, delta)
-    before = {
-        (r["vec_id"], r["cell_id"])
-        for r in sim.read_ivf_index(spark, path)[0].select(
-            "vec_id", "cell_id"
-        ).collect()
-    }
-    assert len(before) == 120
-
-    real_rename = os.rename
-
-    def crashing_rename(src, dst):
-        if src.endswith(".staging"):
-            raise OSError("injected crash at the staging rename")
-        return real_rename(src, dst)
-
-    monkeypatch.setattr(os, "rename", crashing_rename)
-    import pytest as _pytest
-
-    with _pytest.raises(OSError, match="injected crash"):
-        sim.compact_ivf_segments(spark, path)
-    monkeypatch.setattr(os, "rename", real_rename)
-
-    # the backup restore kept the index readable and value-identical
-    after = {
-        (r["vec_id"], r["cell_id"])
-        for r in sim.read_ivf_index(spark, path)[0].select(
-            "vec_id", "cell_id"
-        ).collect()
-    }
-    assert after == before
-
-    # retry completes; flat result still identical
-    stats = sim.compact_ivf_segments(spark, path)
-    assert stats["segments_folded"] == 1 and stats["n_rows"] == 120
-    final = {
-        (r["vec_id"], r["cell_id"])
-        for r in sim.read_ivf_index(spark, path)[0].select(
-            "vec_id", "cell_id"
-        ).collect()
-    }
-    assert final == before
 
 
 def test_multi_doc_keys_minmax_equivalence(spark):
