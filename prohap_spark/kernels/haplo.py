@@ -40,6 +40,8 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 from math import ceil, floor
 
+import numpy as np
+
 from prohap_spark.functions.genomics import CODON_TABLE
 from prohap_spark.kernels.coordinates import check_start_change
 
@@ -50,13 +52,12 @@ def reverse_complement(seq: str) -> str:
     return seq.translate(COMPLEMENT)[::-1]
 
 
-def translate(seq: str, to_stop: bool = True) -> str:
-    # the kernel's hottest function (about 1.3M codon lookups per
-    # synthetic-cohort run, 65% of kernel wall): uppercase ONCE
-    # instead of per codon-slice, bind the dict lookup and list append out of the
-    # loop (measured -20%); the early break stays — stops arrive
-    # after ~30 codons on average, so translate-everything-then-trim
-    # variants measured SLOWER despite listcomp speed
+def translate_codons(seq: str, to_stop: bool = True) -> str:
+    """Codon-by-codon dict translation: 'X' for any codon outside the
+    standard table, trailing partial codon dropped, ``to_stop`` cuts at
+    the first stop (exclusive). Used for the few-codon windows of
+    ``affected_codons``, where it beats the array set-up of
+    ``translate``, and as the reference ``translate`` must equal."""
     s = seq.upper()
     get = CODON_TABLE.get
     aas: list[str] = []
@@ -67,6 +68,43 @@ def translate(seq: str, to_stop: bool = True) -> str:
             break
         app(aa)
     return "".join(aas)
+
+
+def _to_stop(protein: str, start: int) -> str:
+    """``protein`` from residue ``start`` up to its first stop."""
+    stop = protein.find("*", start)
+    return protein[start:] if stop < 0 else protein[start:stop]
+
+
+# base byte -> code 0-3 for ACGT in either case, 4 for anything else;
+# a codon's index is c0*25 + c1*5 + c2 into a 125-entry residue table
+# whose entries with any code-4 base are 'X'
+_BASE_CODE = np.full(256, 4, np.uint8)
+for _i, _b in enumerate(b"ACGT"):
+    _BASE_CODE[_b] = _BASE_CODE[_b + 32] = _i
+_CODON_WEIGHTS = np.array([25, 5, 1], np.uint8)
+_RESIDUES = np.frombuffer(
+    "".join(
+        CODON_TABLE.get(a + b + c, "X") for a in "ACGTN" for b in "ACGTN" for c in "ACGTN"
+    ).encode("ascii"),
+    np.uint8,
+)
+
+
+def translate(seq: str, to_stop: bool = True) -> str:
+    """Translate a DNA string in frame 0, same result as
+    ``translate_codons``. The kernel translates whole mutated
+    transcripts (a few hundred codons and up per item), so the
+    lookup runs over the whole sequence as arrays: bytes -> base codes
+    -> codon index -> residue, then one cut at the first stop. Non-ASCII
+    input takes the codon loop, whose ``str.upper`` may change the
+    string's length."""
+    if not seq.isascii():
+        return translate_codons(seq, to_stop)
+    n = len(seq) - len(seq) % 3
+    codes = _BASE_CODE[np.frombuffer(seq.encode("ascii"), np.uint8, n)]
+    protein = _RESIDUES[codes.reshape(-1, 3) @ _CODON_WEIGHTS].tobytes().decode("ascii")
+    return _to_stop(protein, 0) if to_stop else protein
 
 
 @dataclass
@@ -102,7 +140,7 @@ def affected_codons(
         bp_from = max(max(bp_from, 0), rf)
         bp_to = int(ceil((allele_loc + allele_len - rf) / 3) * 3 + rf)
         if bp_to - bp_from > 2:
-            aas.append(translate(cdna[bp_from:bp_to], to_stop=False))
+            aas.append(translate_codons(cdna[bp_from:bp_to], to_stop=False))
         else:
             aas.append("-")
     return aas, locs
@@ -362,7 +400,7 @@ def apply_haplotype(
         if not nonsyn_prot:
             return None
         proteins = [translate(mutated[f:], to_stop=False) for f in range(3)]
-        protein = translate(mutated, to_stop=True)
+        protein = _to_stop(proteins[0], 0)
         mutated_out = mutated
         prefix_out = protein_start
 
@@ -453,16 +491,18 @@ def apply_variant(
             rf_conseq.append("frameshift" if is_fs else "inframe_indel")
 
     change_str = "|".join(rf_changes)
-    proteins = (
-        [translate(mutated[rf_variant:], to_stop=False)]
-        if rf_variant > -1
-        else [translate(mutated[f:], to_stop=False) for f in range(3)]
-    )
-    protein = (
-        translate(mutated[rf_variant + protein_start_variant * 3 :], to_stop=True)
-        if rf_variant > -1
-        else translate(mutated, to_stop=True)
-    )
+    frames = [rf_variant] if rf_variant > -1 else [0, 1, 2]
+    proteins = [translate(mutated[f:], to_stop=False) for f in frames]
+    # the protein runs from the (shifted) start to the first stop of the
+    # frame's translation; with the frame unknown protein_start_variant
+    # is 0 and the protein is frame 0 up to its first stop
+    if protein_start_variant >= 0:
+        protein = _to_stop(proteins[0], protein_start_variant)
+    else:
+        # a frameshift just upstream of the start under force_rf can put
+        # the new start below the old frame offset: the slice start is
+        # then negative and counts from the 3' end, as it always has
+        protein = translate(mutated[rf_variant + protein_start_variant * 3 :], to_stop=True)
     return HaploResult(
         cdna=mutated,
         protein=protein,

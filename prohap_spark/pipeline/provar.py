@@ -9,8 +9,9 @@ Snakemake DAG collapses into a single Catalyst plan, SURVEY §3.1):
                               │    span bins, exon-level refine with a
                               │    higher-order EXISTS on the exon
                               │    array — no exon explode)
-  cdna ── J2 broadcast ───────┘
-        → mapInPandas U1+U2+U3 (no shuffle; rows self-contained)
+                              │ → hash(transcript_id) over every core
+  cdna ── J2 join ────────────┘
+        → mapInPandas U1+U2+U3 (rows self-contained)
         → A6 dedup by protein sequence
 """
 
@@ -90,7 +91,15 @@ def run_provar(
     if require_start:
         transcripts = transcripts.where(F.col("start_codon").isNotNull())
 
-    assigned = assign_variants_to_transcripts(v, transcripts)
+    # The kernel is the costliest stage and runs once per partition of
+    # its input: spread the (variant, transcript) pairs over every core
+    # by transcript_id. The exchange sits before the cDNA join, so it
+    # carries no cDNA strings. When the transcripts stream through the
+    # interval join already hashed by transcript_id into as many
+    # partitions (gtf_dimensions' aggregation), the planner drops it.
+    assigned = assign_variants_to_transcripts(v, transcripts).repartition(
+        v.sparkSession.sparkContext.defaultParallelism, "transcript_id"
+    )
 
     cdna_dim = cdna.select(
         F.col("accession").alias("transcript_id"), F.col("sequence").alias("cdna")

@@ -48,26 +48,27 @@ class ProHapConfig:
     extra_fastas: list[str] = field(default_factory=list)  # contaminants etc.
 
 
-def _load_world(spark: SparkSession, cfg: ProHapConfig):
+def _load_annotation(spark: SparkSession, cfg: ProHapConfig):
+    """The transcripts, cDNA and variants both pipelines read."""
     dims = gtf_dimensions(read_gtf(spark, cfg.gtf_path))
     transcripts = dims["transcripts"]
     if cfg.mane_only:
         transcripts = select_mane_or_canonical(transcripts)
     cdna = read_fasta(spark, cfg.cdna_fasta_path, truncate_version=True)
     variants = split_multiallelic(read_vcf(spark, cfg.vcf_path))
+    return transcripts, cdna, variants
+
+
+def run_prohap_pipeline(spark: SparkSession, cfg: ProHapConfig) -> dict[str, str]:
+    """VCF+GTF+FASTA+samples → haplotype TSV.gz + FASTA DB. Returns the
+    output paths."""
+    transcripts, cdna, variants = _load_annotation(spark, cfg)
     sample_names = read_vcf_header(spark, cfg.vcf_path)
     meta = (
         spark.read.option("sep", "\t").option("header", True)
         .csv(cfg.samples_tsv_path)
         .toDF("sample_name", "sex", "population_code", "superpopulation_code")
     )
-    return transcripts, cdna, variants, sample_names, meta
-
-
-def run_prohap_pipeline(spark: SparkSession, cfg: ProHapConfig) -> dict[str, str]:
-    """VCF+GTF+FASTA+samples → haplotype TSV.gz + FASTA DB. Returns the
-    output paths."""
-    transcripts, cdna, variants, sample_names, meta = _load_world(spark, cfg)
 
     haplos = extract_haplotypes(
         variants, sample_names, meta, transcripts, min_af=cfg.phased_min_af
@@ -108,7 +109,8 @@ def run_prohap_pipeline(spark: SparkSession, cfg: ProHapConfig) -> dict[str, str
 
 def run_provar_pipeline(spark: SparkSession, cfg: ProHapConfig) -> dict[str, str]:
     """Unphased-VCF variant flavor (SURVEY §3.3)."""
-    transcripts, cdna, variants, _names, _meta = _load_world(spark, cfg)
+    # sites only: no sample header and no samples table
+    transcripts, cdna, variants = _load_annotation(spark, cfg)
     annotated = run_provar(
         variants, transcripts, cdna, min_af=cfg.phased_min_af
     ).persist()  # consumed by both sinks

@@ -60,40 +60,35 @@ def gtf_dimensions(features: DataFrame) -> dict[str, DataFrame]:
 
     transcripts carries the exon array pre-joined in genomic start
     order plus the start/stop codon genomic starts (0 or 1 each per
-    transcript, FIXTURES §4)."""
-    transcripts = features.where(F.col("feature") == "transcript").select(
-        "transcript_id",
-        "gene_id",
-        "gene_name",
-        "chrom",
-        "start",
-        "end",
-        "strand",
-        "biotype",
-        "tags",
-    )
-    exons = (
-        features.where(F.col("feature") == "exon")
-        .select("transcript_id", "start", "end")
+    transcript, FIXTURES §4; a codon split over two exons has two rows
+    and keeps the smaller start).
+
+    The dimension is one scan and one aggregation by transcript_id with
+    conditional aggregates, so it leaves the plan hash-partitioned by
+    transcript_id. Each ``transcript`` line gives one output row, so a
+    transcript with no such line is dropped; one without exons gets null
+    ``exons``, not an empty array."""
+    feature = F.col("feature")
+    attrs = ["gene_id", "gene_name", "chrom", "start", "end", "strand", "biotype", "tags"]
+    grouped = (
+        features.where(feature.isin("transcript", "exon", "start_codon", "stop_codon"))
         .groupBy("transcript_id")
         .agg(
-            F.array_sort(F.collect_list(F.struct("start", "end"))).alias("exons")
+            F.collect_list(F.when(feature == "transcript", F.struct(*attrs))).alias("__tx"),
+            F.collect_list(F.when(feature == "exon", F.struct("start", "end"))).alias("__exons"),
+            F.min(F.when(feature == "start_codon", F.col("start"))).alias("start_codon"),
+            F.min(F.when(feature == "stop_codon", F.col("start"))).alias("stop_codon"),
         )
     )
-    start_codons = (
-        features.where(F.col("feature") == "start_codon")
-        .groupBy("transcript_id")
-        .agg(F.min("start").alias("start_codon"))
-    )
-    stop_codons = (
-        features.where(F.col("feature") == "stop_codon")
-        .groupBy("transcript_id")
-        .agg(F.min("start").alias("stop_codon"))
-    )
-    dim = (
-        transcripts.join(exons, "transcript_id", "left")
-        .join(start_codons, "transcript_id", "left")
-        .join(stop_codons, "transcript_id", "left")
+    dim = grouped.select(
+        "transcript_id",
+        F.explode("__tx").alias("__t"),
+        F.when(F.size("__exons") > 0, F.array_sort("__exons")).alias("exons"),
+        "start_codon",
+        "stop_codon",
+    ).select(
+        "transcript_id", *(F.col(f"__t.{a}").alias(a) for a in attrs),
+        "exons", "start_codon", "stop_codon",
     )
     flat_exons = features.where(F.col("feature") == "exon").select(
         "transcript_id", "chrom", "strand", "start", "end", "exon_number"

@@ -14,6 +14,7 @@ from prohap_spark.kernels.haplo import (
     check_start_gain,
     reverse_complement,
     translate,
+    translate_codons,
 )
 
 #       0123456789...
@@ -302,3 +303,76 @@ def test_apply_haplotype_matches_naive(changes):
         return  # dropped (liftover-only / synonymous-only) — fine
     assert res.cdna == naive_apply(CDNA, res.applied)
     assert len(res.applied) + len(res.liftover_dropped) == len(changes)
+
+
+# ---- the table-lookup translate and the one-translation-per-frame protein
+
+
+@given(
+    st.text(alphabet="ACGTacgtNnRX*-ßéﬀ€", max_size=40) | st.text(alphabet="ACGT", max_size=2),
+    st.booleans(),
+)
+@settings(max_examples=500, deadline=None)
+def test_translate_table_equals_codon_loop(seq, to_stop):
+    assert translate(seq, to_stop) == translate_codons(seq, to_stop)
+
+
+def test_translate_edge_cases():
+    for seq in ("", "A", "AC", "ATGA", "ATGAC", "atgtaa", "ATGNNNTAA", "ATGTA\u00e9", "ATGﬀTAA"):
+        for to_stop in (True, False):
+            assert translate(seq, to_stop) == translate_codons(seq, to_stop), seq
+    assert translate("ATGNNNTAAGGG", to_stop=False) == "MX*G"
+    assert translate("atgtaa") == "M"
+
+
+def two_translations(res):
+    """What apply_variant gave when it translated the protein
+    separately from the frames: the frame's cDNA from the start codon
+    (a negative slice start counts from the 3' end), cut at the stop."""
+    mutated, rf, p = res.cdna, res.reading_frame, res.protein_prefix_length
+    if rf > -1:
+        frames = [translate_codons(mutated[rf:], to_stop=False)]
+        protein = translate_codons(mutated[rf + p * 3 :], to_stop=True)
+    else:
+        frames = [translate_codons(mutated[f:], to_stop=False) for f in range(3)]
+        protein = translate_codons(mutated, to_stop=True)
+    return frames, protein
+
+
+def test_apply_variant_protein_equals_two_translations():
+    # (cdna, change, start_rna, rf_from_stop, force_rf, reading_frame, prefix)
+    cases = [
+        (CDNA, Change(9, "G", "A"), START, -1, False, 0, 1),     # frame known
+        (CDNA, Change(9, "G", "A"), -1, -1, False, -1, 0),       # frame unknown
+        (CDNA, Change(4, "T", "G"), START, -1, False, -1, 0),    # start lost
+        (CDNA, Change(9, "G", "A"), -1, 2, True, 2, 0),          # frame from the stop
+        # frameshift upstream of the start under force_rf: the start
+        # moves to 4 (frame 1) and the prefix is counted in the old frame
+        (CDNA, Change(1, "A", "AG"), START, -1, True, 1, 1),
+        # prefix 0: a 1-base deletion moves the start from 3 to 2
+        (CDNA, Change(0, "A", ""), START, -1, True, 2, 0),
+        # prefix -1: the start at 2 (frame 2) moves to 0
+        ("CA" + CDNA[3:], Change(0, "CA", ""), 2, -1, True, 0, -1),
+    ]
+    for cdna, change, start_rna, rf_from_stop, force_rf, rf, prefix in cases:
+        res = apply_variant(cdna, change, start_rna, rf_from_stop, force_rf)
+        assert (res.reading_frame, res.protein_prefix_length) == (rf, prefix), change
+        assert (res.proteins_by_frame, res.protein) == two_translations(res), change
+    # without force_rf the same upstream frameshift loses the start
+    res = apply_variant(CDNA, Change(1, "A", "AG"), START)
+    assert res.start_lost and (res.proteins_by_frame, res.protein) == two_translations(res)
+
+
+@given(
+    st.integers(0, len(CDNA) - 4),
+    st.integers(0, 3),
+    st.text(alphabet="ACGT", max_size=4),
+    st.integers(-1, 12),
+    st.integers(-1, 2),
+    st.booleans(),
+)
+@settings(max_examples=300, deadline=None)
+def test_apply_variant_matches_two_translations(pos, ref_len, alt, start_rna, rf_from_stop, force_rf):
+    change = Change(pos, CDNA[pos : pos + ref_len], alt)
+    res = apply_variant(CDNA, change, start_rna, rf_from_stop, force_rf)
+    assert (res.proteins_by_frame, res.protein) == two_translations(res)

@@ -657,6 +657,42 @@ def test_prohap_kernel_stage_not_serialized_by_aqe_coalesce(spark):
     assert max(sizes) < 0.8 * total, sizes
 
 
+def test_provar_kernel_stage_spread_over_cores(spark):
+    """The ProVar kernel's input is small in bytes (one row per variant
+    and transcript) and, with broadcast dimension joins, keeps the
+    split count of the variants: a sites VCF of a few MB is read as ONE
+    split, and then the most expensive Python stage runs as one task.
+    run_provar hash-partitions the kernel's input by transcript_id over
+    every core; this pins the runtime behavior on the synthetic cohort
+    with its variants in one split: the kernel's input is spread over
+    several partitions, none holding most of the rows."""
+    import prohap_spark.kernels.spark_kernels as sk
+    import prohap_spark.pipeline.provar as pv
+    from prohap_spark.pipeline.synthetic import materialized_cohort
+
+    variants, transcripts, cdna, _names, _meta = materialized_cohort(spark, 1)
+    one_split = variants.drop("genotypes").coalesce(1)
+    captured = {}
+    orig = sk.annotate_items
+
+    def capture(df, **kw):
+        captured["df"] = df
+        return orig(df, **kw)
+
+    pv.annotate_items = capture
+    try:
+        pv.run_provar(one_split, transcripts, cdna, min_af=0.01).write.format(
+            "noop"
+        ).mode("overwrite").save()
+    finally:
+        pv.annotate_items = orig
+    sizes = [n for n in captured["df"].rdd.glom().map(len).collect() if n]
+    total = sum(sizes)
+    assert total > 500, sizes  # the fixture is non-trivial
+    assert len(sizes) >= 2, sizes
+    assert max(sizes) < 0.8 * total, sizes
+
+
 def test_sketch_queries_plan_shapes(spark, qs):
     """The r9 sketch queries' 100 TB shapes: the Bloom probe joins are
     broadcast (the corpus never shuffles for membership), no nested

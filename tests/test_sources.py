@@ -42,6 +42,83 @@ def test_mane_selection(spark, fixture_paths):
     assert kept == {"T1", "T2"}
 
 
+def _gtf_line(chrom, feature, start, end, strand, attrs):
+    return "\t".join([chrom, "test", feature, str(start), str(end), ".", strand, ".", attrs])
+
+
+def test_gtf_dimensions_edge_cases_one_exchange(spark, tmp_path):
+    """The transcripts dimension on the annotation shapes a real GTF
+    has, against the rows a left join of the transcript lines with the
+    per-transcript exon array and codon minima gives: a transcript
+    without exons (null exons, not an empty array), one without codons,
+    a '-' strand start codon split over two exons (two start_codon rows,
+    the smaller start kept), exon rows whose transcript has no
+    transcript line (dropped), and exon lines out of genomic order. The
+    dimension is built by one aggregation: exactly one shuffle
+    Exchange."""
+    import re
+
+    from prohap_spark.plans import formatted_plan
+    from prohap_spark.sources.gtf import gtf_dimensions, read_gtf
+
+    def attrs(tid, gene="G1", name="GENE1", biotype="protein_coding", tags=()):
+        out = f'gene_id "{gene}"; transcript_id "{tid}"; gene_name "{name}"; transcript_biotype "{biotype}";'
+        return out + "".join(f' tag "{t}";' for t in tags)
+
+    lines = [
+        "#!genome-build test",
+        _gtf_line("1", "gene", 100, 900, "+", 'gene_id "G1"; gene_name "GENE1";'),
+        # full transcript, exons listed 3' first
+        _gtf_line("1", "transcript", 100, 400, "+", attrs("TFULL", tags=("MANE_Select",))),
+        _gtf_line("1", "exon", 300, 400, "+", attrs("TFULL") + ' exon_number "2";'),
+        _gtf_line("1", "exon", 100, 200, "+", attrs("TFULL") + ' exon_number "1";'),
+        _gtf_line("1", "start_codon", 110, 112, "+", attrs("TFULL")),
+        _gtf_line("1", "stop_codon", 350, 352, "+", attrs("TFULL")),
+        # transcript line only
+        _gtf_line("1", "transcript", 500, 600, "+", attrs("TNOEXON", biotype="lncRNA")),
+        # exons but no start/stop codon
+        _gtf_line("2", "transcript", 10, 90, "-", attrs("TNOCODON", "G2", "GENE2")),
+        _gtf_line("2", "exon", 10, 90, "-", attrs("TNOCODON", "G2", "GENE2")),
+        # '-' strand start codon split over the exon junction
+        _gtf_line("2", "transcript", 1000, 2000, "-", attrs("TSPLIT", "G3", "GENE3", tags=("Ensembl_canonical",))),
+        _gtf_line("2", "exon", 1800, 2000, "-", attrs("TSPLIT", "G3", "GENE3")),
+        _gtf_line("2", "exon", 1000, 1500, "-", attrs("TSPLIT", "G3", "GENE3")),
+        _gtf_line("2", "start_codon", 1800, 1801, "-", attrs("TSPLIT", "G3", "GENE3")),
+        _gtf_line("2", "start_codon", 1500, 1500, "-", attrs("TSPLIT", "G3", "GENE3")),
+        _gtf_line("2", "stop_codon", 1000, 1002, "-", attrs("TSPLIT", "G3", "GENE3")),
+        # exons and a codon of a transcript with no transcript line
+        _gtf_line("3", "exon", 5, 50, "+", attrs("TORPHAN", "G4", "GENE4")),
+        _gtf_line("3", "exon", 60, 70, "+", attrs("TORPHAN", "G4", "GENE4")),
+        _gtf_line("3", "start_codon", 5, 7, "+", attrs("TORPHAN", "G4", "GENE4")),
+    ]
+    path = tmp_path / "edge.gtf"
+    path.write_text("\n".join(lines) + "\n")
+
+    tr = gtf_dimensions(read_gtf(spark, str(path)))["transcripts"]
+    shuffles = re.findall(r"^.*[+:]- Exchange \(.*$", formatted_plan(tr), re.M)
+    assert len(shuffles) == 1, "\n".join(shuffles)
+    assert tr.columns == [
+        "transcript_id", "gene_id", "gene_name", "chrom", "start", "end", "strand",
+        "biotype", "tags", "exons", "start_codon", "stop_codon",
+    ]
+    got = sorted(
+        (r["transcript_id"], r["gene_id"], r["gene_name"], r["chrom"], r["start"], r["end"],
+         r["strand"], r["biotype"], r["tags"],
+         None if r["exons"] is None else [(e["start"], e["end"]) for e in r["exons"]],
+         r["start_codon"], r["stop_codon"])
+        for r in tr.collect()
+    )
+    assert got == [
+        ("TFULL", "G1", "GENE1", "1", 100, 400, "+", "protein_coding", ["MANE_Select"],
+         [(100, 200), (300, 400)], 110, 350),
+        ("TNOCODON", "G2", "GENE2", "2", 10, 90, "-", "protein_coding", [],
+         [(10, 90)], None, None),
+        ("TNOEXON", "G1", "GENE1", "1", 500, 600, "+", "lncRNA", [], None, None, None),
+        ("TSPLIT", "G3", "GENE3", "2", 1000, 2000, "-", "protein_coding", ["Ensembl_canonical"],
+         [(1000, 1500), (1800, 2000)], 1500, 1000),
+    ]
+
+
 def test_read_fasta(spark, fixture_paths):
     from prohap_spark.sources.fasta import read_fasta
 
